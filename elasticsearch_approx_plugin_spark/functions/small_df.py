@@ -81,8 +81,10 @@ def _json_cell(v, dt):
     """Schema-driven Python value → JSON-shape value (structs become
     dicts keyed by field name, so positional tuples survive the JSON
     round trip). Raises TypeError for anything ``from_json`` cannot
-    reproduce exactly (binary, timestamps, non-finite floats) — the
-    caller falls back to the parallelize path."""
+    reproduce exactly (binary, timestamps, non-finite floats) or that
+    does not have the column's type (a string for an array, a bool for
+    a number) — the caller falls back to the parallelize path, whose
+    schema check rejects the latter."""
     if v is None:
         return None
     if isinstance(dt, StructType):
@@ -97,12 +99,16 @@ def _json_cell(v, dt):
             f.name: _json_cell(x, f.dataType) for f, x in zip(dt.fields, vals)
         }
     if isinstance(dt, ArrayType):
+        if isinstance(v, (str, bytes)):
+            _raise_type(dt, v)  # iterating would split it into chars
         return [_json_cell(x, dt.elementType) for x in v]
     if isinstance(dt, (LongType, IntegerType, ShortType, ByteType)):
         if isinstance(v, bool):
             raise TypeError(f"expected int for {dt}, got bool")
         return operator.index(v)  # exact for any Integral (incl. numpy)
     if isinstance(dt, (DoubleType, FloatType)):
+        if isinstance(v, bool):
+            raise TypeError(f"expected float for {dt}, got bool")
         f = float(v)
         if not math.isfinite(f):
             raise TypeError("non-finite float")

@@ -32,9 +32,9 @@ from pyspark.sql import functions as F
 
 from ..functions.small_df import small_df
 
-from .bm25 import _idf, score_queries
-from .postings import InvertedIndex
-from .rescore import _warm_df
+from .bm25 import score_queries
+from .phrase import _bm25_fold, _qidf
+from .postings import InvertedIndex, cache_terms
 
 _OPERATORS = ("or", "and")
 
@@ -78,8 +78,7 @@ def common_terms_topk(
         raise ValueError("minimum_should_match must be >= 1")
 
     all_terms = sorted({t for _, ts in queries for t in ts})
-    _warm_df(index, all_terms)
-    cache, n = index.term_cache, float(index.n_docs)
+    cache, n = cache_terms(index, all_terms), float(index.n_docs)
 
     def is_high(t: str) -> bool:
         df = cache[t][0]
@@ -114,37 +113,13 @@ def common_terms_topk(
             # candidates' token arrays — hot postings never scanned
             spark = corpus.sparkSession
             payload = small_df(spark, 
-                [
-                    (
-                        qid,
-                        [
-                            (t, _idf(index.n_docs, cache[t][0]))
-                            for t in hts
-                            if cache[t][0] > 0
-                        ],
-                    )
-                    for qid, hts in high_q
-                ],
+                [(qid, _qidf(index, hts)) for qid, hts in high_q],
                 "query_id long, qidf array<struct<term: string, idf: double>>",
             )
             docs = corpus.select(
                 F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_toks")
             )
-            avgdl = index.avgdl or 1.0
-            k1, b = index.k1, index.b
-            toks = F.col("_toks")
-            dl = F.size(toks).cast("double")
-
-            def _contrib(s):
-                tf = F.size(F.filter(toks, lambda x: x == s["term"])).cast("double")
-                return s["idf"] * (tf * (k1 + 1.0)) / (
-                    tf + k1 * (1.0 - b + b * dl / F.lit(avgdl))
-                )
-
-            hi = F.round(
-                F.aggregate(F.col("qidf"), F.lit(0.0), lambda a, s: a + _contrib(s)),
-                6,
-            )
+            hi = _bm25_fold(index, F.col("_toks"))
             combined = (
                 low_scores.join(docs, "doc_id")
                 .join(F.broadcast(payload), "query_id", "left")

@@ -177,50 +177,6 @@ def ngram_jaccard_pairs(
 _POLY = 0x100000001B3  # odd rolling-hash multiplier (shingle combine)
 
 
-def shingle_hashes(
-    df: DataFrame, tokens_col: str, id_col: str, n: int = DEFAULT_SHINGLE_N
-) -> DataFrame:
-    """(id, shs array<long>) — distinct 64-bit shingle hashes per doc.
-
-    Tokens are hashed ONCE (JVM xxhash64 — the only per-token work;
-    a flat HOF that does codegen-friendly O(tokens) work); each
-    length-n window of token hashes then combines positionally with a
-    rolling polynomial IN NUMPY (uint64 wraparound), followed by a
-    per-doc ``np.unique``. No shingle STRING is ever materialized,
-    and no nested Catalyst HOF runs per window — both the round-1
-    string concat (5 s at sf0.1) and the interpreted
-    sequence∘element_at window expression (12 s) lose to this split
-    (~1 s JVM + ~1 s Arrow). Identical token windows map to identical
-    hashes, so set semantics (and exact Jaccard over the sets) match
-    string shingles w.h.p. (64-bit collisions ~1e-13 per doc pair)."""
-    import numpy as np
-    import pandas as pd
-
-    th = F.transform(F.col(tokens_col), lambda t: F.xxhash64(t))
-    base = df.select(F.col(id_col).alias("id"), th.alias("th")).filter(
-        F.size(F.col(tokens_col)) >= n
-    )
-    # wraparound powers of P via exact Python ints (numpy scalar
-    # multiply warns on overflow even though it wraps correctly)
-    powers = [np.uint64(pow(_POLY, k, 1 << 64)) for k in range(n)]
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for lst in pdf["th"]:
-                t = np.asarray(lst, dtype=np.int64).view(np.uint64)
-                m = t.size - (n - 1)
-                acc = t[0:m] * powers[n - 1]
-                for k in range(1, n):
-                    acc = acc + t[k : m + k] * powers[n - 1 - k]
-                out.append(np.unique(acc).view(np.int64))
-            yield pd.DataFrame({"id": pdf["id"], "shs": out})
-
-    return base.mapInPandas(fn, "id long, shs array<long>")
-
-
 def _minhash_perms(num_hashes: int, seed: int = 42):
     import numpy as np
 
@@ -261,20 +217,6 @@ def _minhash_sigs_np(hs, num_hashes: int, seed: int = 42):
     return sigs
 
 
-def _sig_fn(num_hashes: int, seed: int = 42):
-    import numpy as np
-    import pandas as pd
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sigs = _minhash_sigs_np(pdf["shs"].to_numpy(), num_hashes, seed)
-            yield pd.DataFrame({"id": pdf["id"], "sig": list(sigs.view(np.int64))})
-
-    return fn
-
-
 def _band_buckets_np(sigs, bands: int):
     """(n_docs, num_hashes) uint64 signatures → (n_docs, bands) uint64
     band buckets (rolling polynomial over each band's rows)."""
@@ -297,7 +239,13 @@ def _shingle_sig_banded_fn(n: int, num_hashes: int, bands: int, seed: int = 42):
     all ``num_hashes`` permutation minima → band buckets. Emits
     (id, shs, buckets); band rows explode JVM-side (``posexplode`` of
     a 16-element array — cheap), so the pipeline crosses Python
-    exactly once per row."""
+    exactly once per row. No shingle STRING is materialized and no
+    nested Catalyst HOF runs per window: the string concat (5 s at
+    sf0.1) and the interpreted sequence∘element_at window expression
+    (12 s) both lost to this split (~1 s JVM + ~1 s Arrow). Identical
+    token windows hash identically, so Jaccard over the hash sets
+    matches string shingles w.h.p. (64-bit collisions ~1e-13 per doc
+    pair)."""
     import numpy as np
     import pandas as pd
 
@@ -328,17 +276,6 @@ def _shingle_sig_banded_fn(n: int, num_hashes: int, bands: int, seed: int = 42):
             )
 
     return fn
-
-
-def minhash_signatures(
-    df: DataFrame, tokens_col: str, id_col: str, num_hashes: int = 64, n: int = DEFAULT_SHINGLE_N
-) -> DataFrame:
-    """(id, sig array<long>) — sig[i] = min over shingle hashes of
-    perm_i(h). One JVM token-hash pass, one Arrow pass for all
-    ``num_hashes`` minima."""
-    return shingle_hashes(df, tokens_col, id_col, n).mapInPandas(
-        _sig_fn(num_hashes), "id long, sig array<long>"
-    )
 
 
 def minhash_lsh_dedup(

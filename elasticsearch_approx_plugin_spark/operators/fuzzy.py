@@ -1,48 +1,41 @@
-"""Fuzzy queries: capped edit-distance expansion + BM25 scoring.
+"""Fuzzy queries: edit-distance matching for the shared capped
+expansion.
 
 ES exposes a ``fuzzy`` query (and ``match`` with ``fuzziness``) that
 expands the query term against the term dictionary by Levenshtein
 distance (Lucene caps it at 2), optionally requiring an exact shared
 prefix (``prefix_length``), capped by ``max_expansions``, and runs the
 expanded disjunction. The reference plugin itself has no query types
-(it is a facet pack — see ``prefix.py`` for the same relationship),
-but its facets run inside such queries; this module adds the
-capability Spark-first:
+(it is a facet pack); the expansion plan, its cap and its BM25 scoring
+are :func:`prefix._expand_capped` / :func:`prefix._expanded_topk`.
+This module keeps only what is fuzzy-specific:
 
-- expansion is ONE dictionary scan: per-query ``levenshtein(term, q)``
-  columns feed a literal CASE array + explode (no join, no UDF —
-  ``F.levenshtein`` is a codegen'd JVM expression), and with
-  ``prefix_length > 0`` the OR-of-``startswith`` prefilter pushes
-  ``StringStartsWith`` into the parquet dictionary scan of a persisted
-  index, which is what keeps a fuzzy query from being a full-dictionary
-  scan when the dictionary has billions of terms — the same reason
-  Lucene's FuzzyQuery walks only the automaton-intersecting dictionary
-  range;
-- the per-query cap keeps the collect bounded by
-  queries × max_expansions; expansion order is DETERMINISTIC —
-  (distance ASC, term ASC) — a documented simplification of Lucene's
-  TopTermsBlendedFreqScoringRewrite (which ranks by boost
-  ``1 − distance/length`` and blends doc frequencies); exact matches
-  (distance 0) therefore always survive the cap first;
-- scoring reuses ``bm25.score_queries`` on the expanded term lists —
-  the expanded disjunction scores exactly like a bool-OR of term
-  queries (each term at its own df/idf, no boost blending), so WAND
-  pruning, tombstones, bucket pruning, and rank determinism are
-  inherited, not re-implemented.
+- the match is ``levenshtein(term, q) <= fuzziness`` — a codegen'd JVM
+  expression, no UDF — and with ``prefix_length > 0`` the query's
+  first ``prefix_length`` chars are its literal anchor, which is what
+  keeps a fuzzy query from being a full-dictionary scan when the
+  dictionary has billions of terms (the same reason Lucene's
+  FuzzyQuery walks only the automaton-intersecting dictionary range);
+- expansion order is DETERMINISTIC — (distance ASC, term ASC), the
+  distance riding the expansion as a per-query key — a documented
+  simplification of Lucene's TopTermsBlendedFreqScoringRewrite (which
+  ranks by boost ``1 − distance/length`` and blends doc frequencies);
+  exact matches (distance 0) therefore always survive the cap first.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bm25 import score_queries
 from .postings import InvertedIndex
-
-DEFAULT_MAX_EXPANSIONS = 50  # Lucene's max_expansions default
-MAX_FUZZINESS = 2  # Lucene's LevenshteinAutomata hard cap
+from .prefix import (
+    DEFAULT_MAX_EXPANSIONS,
+    MAX_EDITS,
+    _expand_capped,
+    _expanded_topk,
+    _expansion_lists,
+)
 
 
 def _validated(queries: list[tuple[int, str]]) -> list[tuple[int, str]]:
@@ -51,63 +44,10 @@ def _validated(queries: list[tuple[int, str]]) -> list[tuple[int, str]]:
     return [(int(qid), str(t)) for qid, t in queries]
 
 
-def _expansion_df(
-    index: InvertedIndex,
-    queries: list[tuple[int, str]],
-    fuzziness: int,
-    prefix_length: int,
-    max_expansions: int,
-) -> DataFrame:
-    """The capped expansion as a DataFrame (collected by
-    :func:`fuzzy_expand`; exposed separately so the plan is auditable)."""
-    dictionary = index.dictionary
-    if prefix_length:
-        # a plain OR-of-startswith conjunct: parquet-translatable on a
-        # persisted dictionary (the full conditions below OR-in the
-        # non-pushable levenshtein term, so THEY never reach the scan)
-        dictionary = dictionary.filter(
-            reduce(
-                lambda a, b: a | b,
-                [F.col("term").startswith(qt[:prefix_length]) for _, qt in queries],
-            )
-        )
-    conds, cells = [], []
-    for qid, qt in queries:
-        dist = F.levenshtein(F.col("term"), F.lit(qt))
-        cond = dist <= fuzziness
-        if prefix_length:
-            cond = F.col("term").startswith(qt[:prefix_length]) & cond
-        conds.append(cond)
-        cells.append(
-            F.when(
-                cond,
-                F.struct(
-                    F.lit(qid).cast("long").alias("query_id"), dist.alias("dist")
-                ),
-            )
-        )
-    return (
-        dictionary.filter(reduce(lambda a, b: a | b, conds))
-        .select(
-            "term",
-            F.explode(F.filter(F.array(*cells), lambda x: x.isNotNull())).alias("m"),
-        )
-        .select("term", F.col("m.query_id").alias("query_id"), F.col("m.dist").alias("dist"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy("dist", "term")
-            ),
-        )
-        .filter(F.col("rn") <= max_expansions)
-        .select("query_id", "dist", "term")
-    )
-
-
 def fuzzy_expand(
     index: InvertedIndex,
     queries: list[tuple[int, str]],
-    fuzziness: int = MAX_FUZZINESS,
+    fuzziness: int = MAX_EDITS,
     prefix_length: int = 0,
     max_expansions: int = DEFAULT_MAX_EXPANSIONS,
 ) -> list[tuple[int, list[str]]]:
@@ -115,27 +55,29 @@ def fuzzy_expand(
     ``max_expansions`` terms within Levenshtein distance ``fuzziness``
     (sharing the query's first ``prefix_length`` chars exactly), in
     (distance, term) order. Queries matching nothing expand to []."""
-    if not 0 <= fuzziness <= MAX_FUZZINESS:
-        raise ValueError(f"fuzziness must be in [0, {MAX_FUZZINESS}], got {fuzziness}")
+    if not 0 <= fuzziness <= MAX_EDITS:
+        raise ValueError(f"fuzziness must be in [0, {MAX_EDITS}], got {fuzziness}")
     if prefix_length < 0:
         raise ValueError(f"prefix_length must be >= 0, got {prefix_length}")
-    if max_expansions < 1:
-        raise ValueError(f"max_expansions must be >= 1, got {max_expansions}")
-    queries = _validated(queries)
-    matches = _expansion_df(
-        index, queries, fuzziness, prefix_length, max_expansions
-    ).collect()
-    out: dict[int, list[str]] = {qid: [] for qid, _ in queries}
-    for r in sorted(matches, key=lambda r: (r["query_id"], r["dist"], r["term"])):
-        out[int(r["query_id"])].append(r["term"])
-    return [(qid, terms) for qid, terms in out.items()]
+    matches, keys = [], []
+    for qid, qt in _validated(queries):
+        dist = F.levenshtein(F.col("term"), F.lit(qt))
+        cond = dist <= fuzziness
+        if prefix_length:
+            cond = F.col("term").startswith(qt[:prefix_length]) & cond
+        matches.append((qid, cond, qt[:prefix_length]))
+        keys.append({"dist": dist})
+    expansion = _expand_capped(
+        index.dictionary, matches, max_expansions, ("dist", "term"), keys
+    )
+    return _expansion_lists(expansion, matches, "dist")
 
 
 def fuzzy_topk(
     index: InvertedIndex,
     queries: list[tuple[int, str]],
     k: int = 10,
-    fuzziness: int = MAX_FUZZINESS,
+    fuzziness: int = MAX_EDITS,
     prefix_length: int = 0,
     max_expansions: int = DEFAULT_MAX_EXPANSIONS,
     prune: bool = False,
@@ -144,16 +86,9 @@ def fuzzy_topk(
     The expanded disjunction scores exactly like ``score_queries`` on
     the expanded term list (bool-OR semantics, each term at its own
     idf); zero-match queries yield no rows."""
-    expanded = [
-        (qid, ts)
-        for qid, ts in fuzzy_expand(
-            index, queries, fuzziness, prefix_length, max_expansions
-        )
-        if ts
-    ]
-    if not expanded:
-        spark = index.postings.sparkSession
-        return spark.createDataFrame(
-            [], "query_id long, doc_id long, score double, rank long"
-        )
-    return score_queries(index, expanded, k, prune=prune)
+    return _expanded_topk(
+        index,
+        fuzzy_expand(index, queries, fuzziness, prefix_length, max_expansions),
+        k,
+        prune,
+    )

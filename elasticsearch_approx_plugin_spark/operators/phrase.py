@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 
 from ..functions.small_df import small_df, spread_small_input, width_partitioned
 from .bm25 import _idf
-from .postings import InvertedIndex, _decode_doc_rows
+from .postings import InvertedIndex, _decode_doc_rows, cache_terms
+from .prefix import DEFAULT_MAX_EXPANSIONS, prefix_expand
 
 
 def _term_doc_pairs(index: InvertedIndex, terms: list[str]) -> DataFrame:
@@ -48,21 +49,9 @@ def _term_doc_pairs(index: InvertedIndex, terms: list[str]) -> DataFrame:
     directories on persisted indexes before the scan — the same
     serving discipline as ``bm25.score_queries``.
     """
-    has_buckets = bool(index.n_buckets) and "bucket" in index.postings.columns
-    cache = index.term_cache
-    missing = [t for t in terms if t not in cache]
-    if missing:
-        sel = [F.col("term"), F.col("df")]
-        if has_buckets:
-            sel.append(F.pmod(F.xxhash64("term"), F.lit(index.n_buckets)).alias("bkt"))
-        for r in (
-            index.dictionary.filter(F.col("term").isin(missing)).select(*sel).collect()
-        ):
-            cache[r["term"]] = (int(r["df"]), int(r["bkt"]) if has_buckets else -1)
-        for t in missing:
-            cache.setdefault(t, (0, -1))
+    cache = cache_terms(index, terms)
     postings = index.postings
-    if has_buckets:
+    if index.bucketed:
         buckets = sorted({cache[t][1] for t in terms if cache[t][0] > 0})
         postings = postings.filter(F.col("bucket").isin(buckets))
     filtered = postings.filter(F.col("term").isin(list(terms))).select(
@@ -137,21 +126,17 @@ def _candidates(
     return cand
 
 
-def _matches_with_tokens(
-    index: InvertedIndex,
+def _verify(
+    cand: DataFrame,
     corpus: DataFrame,
-    phrases: list[tuple[int, list[str]]],
+    payload: DataFrame,
     tokens_col: str,
     id_col: str,
 ) -> DataFrame:
-    """(query_id, doc_id, n_occurrences, _toks) for docs with >= 1
-    occurrence; tombstoned docs excluded (live-docs semantics, like the
-    scorers)."""
-    spark = index.postings.sparkSession
-    cand = _candidates(index, phrases)
-    ph = small_df(spark, 
-        [(qid, p) for qid, p in phrases], "query_id long, phrase array<string>"
-    )
+    """The candidate→verify join every phrase/span operator shares:
+    ``cand`` (query_id, doc_id) joined to the candidate docs' token
+    arrays (as ``_toks``) and to the broadcast per-query ``payload``,
+    ready for a row-local positional predicate / BM25 fold."""
     # input-skew guard (no-op for inputs that already split): the
     # row-local verify/score lambdas are CPU-dense and must not ride a
     # 1-task scan of a single small file
@@ -163,16 +148,38 @@ def _matches_with_tokens(
     # the intersection exchange to 1-2 tasks and the verify serializes
     # (guide §2.5/§4; measured 3.2 s single-task stage at sf0.1)
     cand = width_partitioned(cand, "doc_id")
-    return (
-        cand.join(docs, "doc_id")
-        .join(F.broadcast(ph), "query_id")
-        .select(
-            "query_id",
-            "doc_id",
-            _occurrences(F.col("_toks"), F.col("phrase")).alias("n_occurrences"),
-            "_toks",
+    return cand.join(docs, "doc_id").join(F.broadcast(payload), "query_id")
+
+
+def _qidf(index: InvertedIndex, terms: list[str]) -> list[tuple[str, float]]:
+    """The (term, idf) pairs :func:`_bm25_fold` sums over: each distinct
+    term in the index, from the warm ``index.term_cache``."""
+    cache = index.term_cache
+    return [
+        (t, _idf(index.n_docs, cache[t][0]))
+        for t in sorted(set(terms))
+        if cache[t][0] > 0
+    ]
+
+
+def _bm25_fold(index: InvertedIndex, toks: Column) -> Column:
+    """The row-local BM25 of a doc's token array ``toks`` against the
+    per-query ``qidf`` (array<struct<term, idf>>) column: the same
+    idf / tfnorm arithmetic as the term scorers (corpus-level avgdl,
+    6-dp rounding), with tf/dl read off the array — no postings pass
+    and no scoring join."""
+    avgdl = index.avgdl or 1.0
+    k1, b = index.k1, index.b
+    dl = F.size(toks).cast("double")
+
+    def _contrib(s: Column) -> Column:
+        tf = F.size(F.filter(toks, lambda x: x == s["term"])).cast("double")
+        return s["idf"] * (tf * (k1 + 1.0)) / (
+            tf + k1 * (1.0 - b + b * dl / F.lit(avgdl))
         )
-        .filter(F.col("n_occurrences") > 0)
+
+    return F.round(
+        F.aggregate(F.col("qidf"), F.lit(0.0), lambda acc, s: acc + _contrib(s)), 6
     )
 
 
@@ -186,17 +193,26 @@ def phrase_match(
     """Exact phrase match: (query_id, doc_id, n_occurrences) for every
     document where the phrase's tokens appear CONSECUTIVELY at least
     once; occurrences counted with positional (overlapping) semantics —
-    ``["table","table"]`` occurs twice in ``table table table``."""
-    return _matches_with_tokens(
-        index, corpus, _validated(phrases), tokens_col, id_col
-    ).select("query_id", "doc_id", "n_occurrences")
+    ``["table","table"]`` occurs twice in ``table table table``.
+    Tombstoned docs are excluded (live-docs semantics, like the
+    scorers)."""
+    phrases = _validated(phrases)
+    spark = index.postings.sparkSession
+    cand = _candidates(index, phrases)
+    payload = small_df(spark, phrases, "query_id long, phrase array<string>")
+    occ = _occurrences(F.col("_toks"), F.col("phrase"))
+    return (
+        _verify(cand, corpus, payload, tokens_col, id_col)
+        .select("query_id", "doc_id", occ.alias("n_occurrences"))
+        .filter(F.col("n_occurrences") > 0)
+    )
 
 
 def phrase_prefix_match(
     index: InvertedIndex,
     corpus: DataFrame,
     queries: list[tuple[int, list[str]]],
-    max_expansions: int = 50,
+    max_expansions: int = DEFAULT_MAX_EXPANSIONS,
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -216,8 +232,6 @@ def phrase_prefix_match(
     adjacency then verifies row-locally like :func:`phrase_match`.
     A single-element query degenerates to "any token in the expansion"
     (ES's prefix-only match_phrase_prefix)."""
-    from .prefix import prefix_expand
-
     queries = _validated(queries)
     spark = index.postings.sparkSession
     expanded = dict(
@@ -260,12 +274,6 @@ def phrase_prefix_match(
         [(qid, p[:-1], expanded[qid]) for qid, p in queries],
         "query_id long, phrase array<string>, alts array<string>",
     )
-    # input-skew guard (no-op for inputs that already split): the
-    # row-local verify/score lambdas are CPU-dense and must not ride a
-    # 1-task scan of a single small file
-    docs = spread_small_input(
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_toks"))
-    )
     toks, phrase, alts = F.col("_toks"), F.col("phrase"), F.col("alts")
     occ = F.when(
         F.size(toks) > F.size(phrase),
@@ -277,14 +285,8 @@ def phrase_prefix_match(
             )
         ),
     ).otherwise(F.lit(0)).cast("long")
-    # the verify/score HOFs are CPU-dense per candidate row while the
-    # candidate bytes are tiny — without an explicit width AQE coalesces
-    # the intersection exchange to 1-2 tasks and the verify serializes
-    # (guide §2.5/§4; measured 3.2 s single-task stage at sf0.1)
-    cand = width_partitioned(cand, "doc_id")
     return (
-        cand.join(docs, "doc_id")
-        .join(F.broadcast(payload), "query_id")
+        _verify(cand, corpus, payload, tokens_col, id_col)
         .select("query_id", "doc_id", occ.alias("n_occurrences"))
         .filter(F.col("n_occurrences") > 0)
     )
@@ -317,55 +319,18 @@ def phrase_topk(
         raise ValueError(f"k must be >= 1, got {k}")
     phrases = _validated(phrases)
     spark = index.postings.sparkSession
-    cand = _candidates(index, phrases)
-    cache = index.term_cache  # warm after _candidates
+    cand = _candidates(index, phrases)  # warms index.term_cache for _qidf
     payload = small_df(spark, 
-        [
-            (
-                qid,
-                p,
-                [
-                    (t, _idf(index.n_docs, cache[t][0]))
-                    for t in sorted(set(p))
-                    if cache[t][0] > 0
-                ],
-            )
-            for qid, p in phrases
-        ],
+        [(qid, p, _qidf(index, p)) for qid, p in phrases],
         "query_id long, phrase array<string>, "
         "qidf array<struct<term: string, idf: double>>",
     )
-    # input-skew guard (no-op for inputs that already split): the
-    # row-local verify/score lambdas are CPU-dense and must not ride a
-    # 1-task scan of a single small file
-    docs = spread_small_input(
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_toks"))
-    )
-    avgdl = index.avgdl or 1.0
-    k1, b = index.k1, index.b
     toks = F.col("_toks")
-    dl = F.size(toks).cast("double")
-
-    def _contrib(s: Column) -> Column:
-        tf = F.size(F.filter(toks, lambda x: x == s["term"])).cast("double")
-        return s["idf"] * (tf * (k1 + 1.0)) / (
-            tf + k1 * (1.0 - b + b * dl / F.lit(avgdl))
-        )
-
-    score = F.round(
-        F.aggregate(F.col("qidf"), F.lit(0.0), lambda acc, s: acc + _contrib(s)), 6
-    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    # the verify/score HOFs are CPU-dense per candidate row while the
-    # candidate bytes are tiny — without an explicit width AQE coalesces
-    # the intersection exchange to 1-2 tasks and the verify serializes
-    # (guide §2.5/§4; measured 3.2 s single-task stage at sf0.1)
-    cand = width_partitioned(cand, "doc_id")
     return (
-        cand.join(docs, "doc_id")
-        .join(F.broadcast(payload), "query_id")
+        _verify(cand, corpus, payload, tokens_col, id_col)
         .filter(_occurrences(toks, F.col("phrase")) > 0)
-        .select("query_id", "doc_id", score.alias("score"))
+        .select("query_id", "doc_id", _bm25_fold(index, toks).alias("score"))
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
     )

@@ -39,7 +39,7 @@ import json
 import os
 from dataclasses import dataclass, field
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.small_df import small_df, spread_small_input
@@ -101,6 +101,46 @@ class InvertedIndex:
     def ub_scale(self) -> float:
         base = self.bound_avgdl if self.bound_avgdl else self.avgdl
         return max(1.0, self.avgdl / base)
+
+    @property
+    def bucketed(self) -> bool:
+        """Persisted with ``bucket=N`` postings directories, so a
+        term's postings scan prunes to its bucket."""
+        return bool(self.n_buckets) and "bucket" in self.postings.columns
+
+
+def term_bucket(n_buckets: int) -> Column:
+    """A term's postings bucket: Spark's seed-42
+    ``pmod(xxhash64(term), n_buckets)``, only computable JVM-side."""
+    return F.pmod(F.xxhash64("term"), F.lit(n_buckets))
+
+
+def cache_term_stats(index: InvertedIndex, dictionary: DataFrame) -> None:
+    """Put (df, bucket) for every row of ``dictionary`` — a filtered
+    view of ``index.dictionary`` — into ``index.term_cache``: one
+    collect, with the bucket hash riding it (-1 when unbucketed)."""
+    bucketed = index.bucketed
+    sel = [F.col("term"), F.col("df")]
+    if bucketed:
+        sel.append(term_bucket(index.n_buckets).alias("bkt"))
+    for r in dictionary.select(*sel).collect():
+        index.term_cache[r["term"]] = (
+            int(r["df"]),
+            int(r["bkt"]) if bucketed else -1,
+        )
+
+
+def cache_terms(index: InvertedIndex, terms: list[str]) -> dict:
+    """``index.term_cache`` holding every term of ``terms``: one
+    dictionary collect for the terms not cached yet, zero jobs when
+    warm; terms absent from the dictionary cache as (0, -1)."""
+    cache = index.term_cache
+    missing = [t for t in terms if t not in cache]
+    if missing:
+        cache_term_stats(index, index.dictionary.filter(F.col("term").isin(missing)))
+        for t in missing:
+            cache.setdefault(t, (0, -1))
+    return cache
 
 
 def assign_doc_ids(
@@ -356,7 +396,7 @@ def write_index(index: InvertedIndex, path: str, n_buckets: int = 16) -> dict:
         with open(manifest_path) as f:
             done = json.load(f).get("buckets", {})
 
-    pb = index.postings.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
+    pb = index.postings.withColumn("bucket", term_bucket(n_buckets))
     todo = [b for b in range(n_buckets) if str(b) not in done]
     dict_plan = index.dictionary
     stats_plan = index.doc_stats
@@ -1020,7 +1060,7 @@ def append_to_index(
         precomputed_stats=(n_new, avgdl_new),
     )
     delta_pb = delta.postings.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets))
+        "bucket", term_bucket(n_buckets)
     ).persist()
     touched = sorted(r["bucket"] for r in delta_pb.select("bucket").distinct().collect())
     old = spark.read.schema(POSTINGS_FILE_SCHEMA).parquet(os.path.join(path, "postings")).filter(
@@ -1031,7 +1071,7 @@ def append_to_index(
         .repartition(n_shuffle_partitions(spark), "term", "range_id")
         .drop("bucket")
         .mapInArrow(_merge_partition, POSTINGS_SCHEMA)
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
+        .withColumn("bucket", term_bucket(n_buckets))
     )
     # the delta's dictionary partials aggregate from the PERSISTED
     # delta_pb — delta.dictionary would re-run the whole delta build

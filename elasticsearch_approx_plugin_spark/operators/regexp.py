@@ -1,16 +1,17 @@
-"""Regexp queries: capped anchored-regex expansion + BM25 scoring.
+"""Regexp queries: pattern translation for the shared capped
+expansion.
 
 ES's ``regexp`` query matches whole terms against a regular expression
 (Lucene RegexpQuery — an automaton intersection over the term
-dictionary; the pattern is implicitly anchored at both ends).
-Spark-first (see ``wildcard.py`` / ``fuzzy.py`` for the same
-relationship to the reference, which is a facet pack with no query
-types of its own):
+dictionary; the pattern is implicitly anchored at both ends). The
+reference is a facet pack with no query types of its own; the
+expansion plan, its cap and its BM25 scoring are
+:func:`prefix._expand_capped` / :func:`prefix._expanded_topk`. This
+module keeps only what is regexp-specific:
 
 - the pattern runs as a codegen'd JVM ``RLIKE`` against the term
   dictionary, explicitly anchored ``^(?:pat)$`` to reproduce Lucene's
-  whole-term semantics — one dictionary scan for the whole query
-  batch;
+  whole-term semantics;
 - only the portable core of the Lucene regexp syntax is accepted
   (``. ? + * | ( ) [ ] { }`` and backslash escapes — the operators
   Lucene, Java regex, and RE2 all agree on). Lucene's OPTIONAL
@@ -18,28 +19,24 @@ types of its own):
   intersection, ``@`` any-string) and Java-only anchors (``^ $``)
   are rejected with a clear error instead of silently changing
   meaning across engines;
-- a pattern with a literal prefix (chars before the first
-  metacharacter) contributes a pushable OR-of-``startswith``
-  prefilter, the same dictionary-range seek Lucene's automaton gets
-  from its common prefix; a pattern starting at a metacharacter scans
-  the full dictionary (Lucene's cost model, inherited);
-- expansion is capped per query at ``max_expansions`` in term order
-  (deterministic), and scoring reuses ``bm25.score_queries`` on the
-  expanded term lists — bool-OR semantics, each term at its own idf,
-  with WAND / tombstones / bucket pruning inherited.
+- the chars before the first metacharacter are the query's literal
+  anchor, the analog of the dictionary-range seek Lucene's automaton
+  gets from its common prefix; a pattern starting at a metacharacter
+  scans the full dictionary (Lucene's cost model, inherited).
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bm25 import score_queries
 from .postings import InvertedIndex
-
-DEFAULT_MAX_EXPANSIONS = 50  # Lucene's max_expansions default
+from .prefix import (
+    DEFAULT_MAX_EXPANSIONS,
+    _expand_capped,
+    _expanded_topk,
+    _expansion_lists,
+)
 
 _META = set(".?+*|(){}[]")
 _REJECTED = set("^$~<>&@")  # Lucene-optional or Java-only operators
@@ -95,42 +92,6 @@ def _validated(queries: list[tuple[int, str]]) -> list[tuple[int, str]]:
     return [(int(qid), str(p)) for qid, p in queries]
 
 
-def _expansion_df(
-    index: InvertedIndex,
-    queries: list[tuple[int, str]],
-    max_expansions: int,
-) -> DataFrame:
-    """The capped expansion as a DataFrame (collected by
-    :func:`regexp_expand`; exposed separately so the plan is
-    auditable)."""
-    dictionary = index.dictionary
-    prefixes = [literal_prefix(p) for _, p in queries]
-    if all(prefixes):
-        # every pattern is prefix-anchored: one pushable conjunct
-        dictionary = dictionary.filter(
-            reduce(lambda a, b: a | b, [F.col("term").startswith(p) for p in prefixes])
-        )
-    conds = [F.col("term").rlike(to_anchored(p)) for _, p in queries]
-    cells = [
-        F.when(cond, F.lit(qid).cast("long"))
-        for cond, (qid, _) in zip(conds, queries)
-    ]
-    return (
-        dictionary.filter(reduce(lambda a, b: a | b, conds))
-        .select(
-            "term",
-            F.explode(F.filter(F.array(*cells), lambda x: x.isNotNull())).alias(
-                "query_id"
-            ),
-        )
-        .withColumn(
-            "rn", F.row_number().over(Window.partitionBy("query_id").orderBy("term"))
-        )
-        .filter(F.col("rn") <= max_expansions)
-        .select("query_id", "term")
-    )
-
-
 def regexp_expand(
     index: InvertedIndex,
     queries: list[tuple[int, str]],
@@ -139,16 +100,13 @@ def regexp_expand(
     """Expand each (query_id, pattern): the first ``max_expansions``
     whole-term-matching dictionary terms in term order. No-match
     queries → []."""
-    if max_expansions < 1:
-        raise ValueError(f"max_expansions must be >= 1, got {max_expansions}")
-    queries = _validated(queries)
-    for _, p in queries:
-        to_anchored(p)  # validate eagerly, before any Spark job
-    matches = _expansion_df(index, queries, max_expansions).collect()
-    out: dict[int, list[str]] = {qid: [] for qid, _ in queries}
-    for r in sorted(matches, key=lambda r: (r["query_id"], r["term"])):
-        out[int(r["query_id"])].append(r["term"])
-    return [(qid, terms) for qid, terms in out.items()]
+    queries = [
+        (qid, F.col("term").rlike(to_anchored(p)), literal_prefix(p))
+        for qid, p in _validated(queries)
+    ]
+    return _expansion_lists(
+        _expand_capped(index.dictionary, queries, max_expansions), queries
+    )
 
 
 def regexp_topk(
@@ -161,14 +119,6 @@ def regexp_topk(
     """BM25 top-k for regexp queries: (query_id, doc_id, score, rank).
     Scores exactly like ``score_queries`` on the expanded term list
     (bool-OR); no-match patterns yield no rows."""
-    expanded = [
-        (qid, ts)
-        for qid, ts in regexp_expand(index, queries, max_expansions)
-        if ts
-    ]
-    if not expanded:
-        spark = index.postings.sparkSession
-        return spark.createDataFrame(
-            [], "query_id long, doc_id long, score double, rank long"
-        )
-    return score_queries(index, expanded, k, prune=prune)
+    return _expanded_topk(
+        index, regexp_expand(index, queries, max_expansions), k, prune
+    )

@@ -41,33 +41,15 @@ scoring is the final per-query top-k window over ≤ q × window rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.small_df import small_df
-from .bm25 import _idf, score_queries
-from .phrase import _occurrences
-from .postings import InvertedIndex
+from .bm25 import score_queries
+from .phrase import _bm25_fold, _occurrences, _qidf
+from .postings import InvertedIndex, cache_terms
 
 _RESCORE_TYPES = ("match", "match_phrase")
-
-
-def _warm_df(index: InvertedIndex, terms: list[str]) -> None:
-    """Fill ``index.term_cache`` df entries for never-seen terms (one
-    dictionary collect, zero jobs when warm) — same discipline as
-    ``phrase._term_doc_pairs`` but df-only (no postings touched)."""
-    cache = index.term_cache
-    missing = [t for t in terms if t not in cache]
-    if not missing:
-        return
-    has_buckets = bool(index.n_buckets) and "bucket" in index.postings.columns
-    sel = [F.col("term"), F.col("df")]
-    if has_buckets:
-        sel.append(F.pmod(F.xxhash64("term"), F.lit(index.n_buckets)).alias("bkt"))
-    for r in index.dictionary.filter(F.col("term").isin(missing)).select(*sel).collect():
-        cache[r["term"]] = (int(r["df"]), int(r["bkt"]) if has_buckets else -1)
-    for t in missing:
-        cache.setdefault(t, (0, -1))
 
 
 def rescore_topk(
@@ -155,21 +137,11 @@ def rescore_window(
             F.col("_base").alias("score"),
             F.lit(0).cast("long").alias("rank"),
         )
-    r_terms = sorted({t for ts in rescores.values() for t in ts})
-    _warm_df(index, r_terms)
-    cache = index.term_cache
+    cache_terms(index, sorted({t for ts in rescores.values() for t in ts}))
     spark = corpus.sparkSession
     payload = small_df(spark, 
         [
-            (
-                int(qid),
-                [str(t) for t in ts],
-                [
-                    (t, _idf(index.n_docs, cache[t][0]))
-                    for t in sorted(set(ts))
-                    if cache[t][0] > 0
-                ],
-            )
+            (int(qid), [str(t) for t in ts], _qidf(index, ts))
             for qid, ts in rescores.items()
         ],
         "query_id long, phrase array<string>, "
@@ -178,20 +150,8 @@ def rescore_window(
     docs = corpus.filter(F.col(id_col).isin(win_ids)).select(
         F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_toks")
     )
-    avgdl = index.avgdl or 1.0
-    k1, b = index.k1, index.b
     toks = F.col("_toks")
-    dl = F.size(toks).cast("double")
-
-    def _contrib(s: Column) -> Column:
-        tf = F.size(F.filter(toks, lambda x: x == s["term"])).cast("double")
-        return s["idf"] * (tf * (k1 + 1.0)) / (
-            tf + k1 * (1.0 - b + b * dl / F.lit(avgdl))
-        )
-
-    resc = F.round(
-        F.aggregate(F.col("qidf"), F.lit(0.0), lambda acc, s: acc + _contrib(s)), 6
-    )
+    resc = _bm25_fold(index, toks)
     if rescore_type == "match_phrase":
         resc = F.when(_occurrences(toks, F.col("phrase")) > 0, resc).otherwise(
             F.lit(0.0)

@@ -35,19 +35,26 @@ Semantics (Lucene, for single-term clauses — the portable core; ES
   ``exists``/``aggregate`` lambdas over the token array, no Python, no
   shuffle; per-row cost O(n_tokens × (m + slop)) on candidate docs
   only;
-- scoring reuses :func:`phrase.phrase_topk`'s row-local BM25 fold, so
+- candidates, the verify join and the row-local BM25 fold are
+  :mod:`phrase`'s (``_candidates``, ``_verify``, ``_bm25_fold``), so
   the ranked variant adds no postings pass and no scoring join.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.small_df import small_df, spread_small_input, width_partitioned
-from .bm25 import _idf
-from .phrase import _candidates, _validated
+from ..functions.small_df import small_df
+from .phrase import _bm25_fold, _candidates, _qidf, _validated, _verify
 from .postings import InvertedIndex
+
+_NEAR_SCHEMA = (
+    "query_id long, qterms array<string>, "
+    "qcounts array<struct<term: string, cnt: int>>, length int"
+)
 
 
 def _window_starts(toks: Column) -> Column:
@@ -89,20 +96,22 @@ def _unordered_hit(toks: Column, qcounts: Column, length: Column) -> Column:
     return F.exists(_window_starts(toks), window_ok)
 
 
-def _span_payload(spark, queries, slop: int, in_order: bool):
-    rows = []
-    for qid, terms in queries:
-        counts: dict[str, int] = {}
-        for t in terms:
-            counts[t] = counts.get(t, 0) + 1
-        rows.append(
-            (qid, terms, sorted(counts.items()), len(terms) + slop)
-        )
-    return small_df(spark, 
-        rows,
-        "query_id long, qterms array<string>, "
-        "qcounts array<struct<term: string, cnt: int>>, length int",
-    )
+def _near_rows(queries: list[tuple[int, list[str]]], slop: int) -> list[tuple]:
+    """Per-query ``_NEAR_SCHEMA`` payload rows: the clause terms, their
+    multiplicities and the ``m + slop`` window length."""
+    return [
+        (qid, terms, sorted(Counter(terms).items()), len(terms) + slop)
+        for qid, terms in queries
+    ]
+
+
+def _near_hit(in_order: bool) -> Column:
+    """The span_near predicate over a verified row's ``_toks`` and its
+    ``_NEAR_SCHEMA`` payload columns."""
+    toks, length = F.col("_toks"), F.col("length")
+    if in_order:
+        return _ordered_hit(toks, F.col("qterms"), length)
+    return _unordered_hit(toks, F.col("qcounts"), length)
 
 
 def span_near_match(
@@ -121,25 +130,10 @@ def span_near_match(
     queries = _validated(queries)
     spark = index.postings.sparkSession
     cand = _candidates(index, queries)
-    payload = _span_payload(spark, queries, slop, in_order)
-    docs = spread_small_input(  # input-skew guard, no-op when split
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_toks"))
-    )
-    toks, length = F.col("_toks"), F.col("length")
-    hit = (
-        _ordered_hit(toks, F.col("qterms"), length)
-        if in_order
-        else _unordered_hit(toks, F.col("qcounts"), length)
-    )
-    # the verify/score HOFs are CPU-dense per candidate row while the
-    # candidate bytes are tiny — without an explicit width AQE coalesces
-    # the intersection exchange to 1-2 tasks and the verify serializes
-    # (guide §2.5/§4; measured 3.2 s single-task stage at sf0.1)
-    cand = width_partitioned(cand, "doc_id")
+    payload = small_df(spark, _near_rows(queries, slop), _NEAR_SCHEMA)
     return (
-        cand.join(docs, "doc_id")
-        .join(F.broadcast(payload), "query_id")
-        .filter(hit)
+        _verify(cand, corpus, payload, tokens_col, id_col)
+        .filter(_near_hit(in_order))
         .select("query_id", "doc_id")
     )
 
@@ -162,20 +156,11 @@ def span_first_match(
     payload = small_df(spark, 
         [(qid, p[0]) for qid, p in qlist], "query_id long, qterm string"
     )
-    docs = spread_small_input(  # input-skew guard, no-op when split
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_toks"))
-    )
     hit = F.array_position(
         F.slice(F.col("_toks"), 1, end), F.col("qterm")
     ) > 0
-    # the verify/score HOFs are CPU-dense per candidate row while the
-    # candidate bytes are tiny — without an explicit width AQE coalesces
-    # the intersection exchange to 1-2 tasks and the verify serializes
-    # (guide §2.5/§4; measured 3.2 s single-task stage at sf0.1)
-    cand = width_partitioned(cand, "doc_id")
     return (
-        cand.join(docs, "doc_id")
-        .join(F.broadcast(payload), "query_id")
+        _verify(cand, corpus, payload, tokens_col, id_col)
         .filter(hit)
         .select("query_id", "doc_id")
     )
@@ -202,58 +187,16 @@ def span_near_topk(
         raise ValueError(f"slop must be >= 0, got {slop}")
     queries = _validated(queries)
     spark = index.postings.sparkSession
-    cand = _candidates(index, queries)
-    cache = index.term_cache  # warm after _candidates
-    rows = []
-    for qid, terms in queries:
-        counts: dict[str, int] = {}
-        for t in terms:
-            counts[t] = counts.get(t, 0) + 1
-        qidf = [
-            (t, _idf(index.n_docs, cache[t][0]))
-            for t in sorted(set(terms))
-            if cache[t][0] > 0
-        ]
-        rows.append((qid, terms, sorted(counts.items()), len(terms) + slop, qidf))
+    cand = _candidates(index, queries)  # warms index.term_cache for _qidf
     payload = small_df(spark, 
-        rows,
-        "query_id long, qterms array<string>, "
-        "qcounts array<struct<term: string, cnt: int>>, length int, "
-        "qidf array<struct<term: string, idf: double>>",
-    )
-    docs = spread_small_input(  # input-skew guard, no-op when split
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_toks"))
-    )
-    toks, length = F.col("_toks"), F.col("length")
-    hit = (
-        _ordered_hit(toks, F.col("qterms"), length)
-        if in_order
-        else _unordered_hit(toks, F.col("qcounts"), length)
-    )
-    avgdl = index.avgdl or 1.0
-    k1, b = index.k1, index.b
-    dl = F.size(toks).cast("double")
-
-    def _contrib(s: Column) -> Column:
-        tf = F.size(F.filter(toks, lambda x: x == s["term"])).cast("double")
-        return s["idf"] * (tf * (k1 + 1.0)) / (
-            tf + k1 * (1.0 - b + b * dl / F.lit(avgdl))
-        )
-
-    score = F.round(
-        F.aggregate(F.col("qidf"), F.lit(0.0), lambda acc, s: acc + _contrib(s)), 6
+        [row + (_qidf(index, row[1]),) for row in _near_rows(queries, slop)],
+        _NEAR_SCHEMA + ", qidf array<struct<term: string, idf: double>>",
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    # the verify/score HOFs are CPU-dense per candidate row while the
-    # candidate bytes are tiny — without an explicit width AQE coalesces
-    # the intersection exchange to 1-2 tasks and the verify serializes
-    # (guide §2.5/§4; measured 3.2 s single-task stage at sf0.1)
-    cand = width_partitioned(cand, "doc_id")
     return (
-        cand.join(docs, "doc_id")
-        .join(F.broadcast(payload), "query_id")
-        .filter(hit)
-        .select("query_id", "doc_id", score.alias("score"))
+        _verify(cand, corpus, payload, tokens_col, id_col)
+        .filter(_near_hit(in_order))
+        .select("query_id", "doc_id", _bm25_fold(index, F.col("_toks")).alias("score"))
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
     )

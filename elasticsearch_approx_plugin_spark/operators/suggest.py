@@ -8,13 +8,13 @@ string-similarity score then document frequency.  The reference
 plugin's facets ride the same search requests, so its users issue
 suggesters daily; this module re-expresses the suggester Spark-first:
 
-- candidate generation is ONE dictionary scan, the ``fuzzy.py``
-  shape: per-input ``F.levenshtein`` conditions feed a literal CASE
-  array + explode (codegen'd JVM expressions, no join, no UDF), and
-  ``prefix_length > 0`` contributes an OR-of-``startswith`` conjunct
-  that pushes into a persisted dictionary's parquet scan — the same
-  reason Lucene's DirectSpellChecker only walks the automaton's
-  dictionary range;
+- candidate generation is the shared capped expansion
+  (:func:`prefix._expand_capped`, the ``fuzzy.py`` match): per-input
+  ``F.levenshtein`` conditions, ranked per input by (score, freq,
+  term) and capped at ``size``; with ``prefix_length > 0`` each
+  input's prefix is its literal anchor, which pushes into a persisted
+  dictionary's parquet scan — the same reason Lucene's
+  DirectSpellChecker only walks the automaton's dictionary range;
 - the score is the documented deterministic variant of Lucene's
   LevenshteinDistance similarity:
   ``round(1 − dist / max(len(input), len(candidate)), 6)`` — integer
@@ -37,17 +37,14 @@ window over candidate-count rows.
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .postings import InvertedIndex
-from .rescore import _warm_df
+from .postings import InvertedIndex, cache_terms
+from .prefix import MAX_EDITS, _expand_capped
 
 _MODES = ("missing", "popular", "always")
 _SORTS = ("score", "frequency")
-MAX_EDITS_CAP = 2  # Lucene's LevenshteinAutomata hard cap
 
 
 def term_suggest(
@@ -56,7 +53,7 @@ def term_suggest(
     size: int = 5,
     suggest_mode: str = "missing",
     sort: str = "score",
-    max_edits: int = 2,
+    max_edits: int = MAX_EDITS,
     prefix_length: int = 1,
     min_word_length: int = 4,
     min_doc_freq: int = 0,
@@ -76,14 +73,13 @@ def term_suggest(
         raise ValueError(f"suggest_mode must be one of {_MODES}")
     if sort not in _SORTS:
         raise ValueError(f"sort must be one of {_SORTS}")
-    if not 1 <= max_edits <= MAX_EDITS_CAP:
-        raise ValueError(f"max_edits must be in [1, {MAX_EDITS_CAP}], got {max_edits}")
+    if not 1 <= max_edits <= MAX_EDITS:
+        raise ValueError(f"max_edits must be in [1, {MAX_EDITS}], got {max_edits}")
     if prefix_length < 0 or min_word_length < 1 or min_doc_freq < 0:
         raise ValueError("prefix_length/min_word_length/min_doc_freq out of range")
     inputs = [(int(qid), str(t)) for qid, t in inputs]
 
-    _warm_df(index, sorted({t for _, t in inputs}))
-    cache = index.term_cache
+    cache = cache_terms(index, sorted({t for _, t in inputs}))
     eligible = [(qid, t) for qid, t in inputs if len(t) >= min_word_length]
     if suggest_mode == "missing":
         eligible = [(qid, t) for qid, t in eligible if cache[t][0] == 0]
@@ -96,17 +92,9 @@ def term_suggest(
         return spark.createDataFrame([], out_schema)
 
     dictionary = index.dictionary
-    if prefix_length:
-        dictionary = dictionary.filter(
-            reduce(
-                lambda a, b: a | b,
-                [F.col("term").startswith(t[:prefix_length]) for _, t in eligible],
-            )
-        )
     if min_doc_freq:
         dictionary = dictionary.filter(F.col("df") >= min_doc_freq)
-
-    cells = []
+    queries, keys = [], []
     for qid, t in eligible:
         dist = F.levenshtein(F.col("term"), F.lit(t))
         cond = (F.col("term") != t) & (dist <= max_edits)
@@ -120,29 +108,17 @@ def term_suggest(
             / F.greatest(F.lit(len(t)), F.length("term")).cast("double"),
             6,
         )
-        cells.append(
-            F.when(
-                cond,
-                F.struct(
-                    F.lit(qid).cast("long").alias("query_id"), score.alias("score")
-                ),
-            )
-        )
+        queries.append((qid, cond, t[:prefix_length]))
+        keys.append({"score": score})
     order = (
-        [F.desc("score"), F.desc("freq"), F.asc("suggestion")]
+        [F.desc("score"), F.desc("df"), F.asc("term")]
         if sort == "score"
-        else [F.desc("freq"), F.desc("score"), F.asc("suggestion")]
+        else [F.desc("df"), F.desc("score"), F.asc("term")]
     )
-    return (
-        dictionary.select(
-            F.col("term").alias("suggestion"),
-            F.col("df").cast("long").alias("freq"),
-            F.explode(F.filter(F.array(*cells), lambda x: x.isNotNull())).alias("m"),
-        )
-        .select("m.query_id", "suggestion", "m.score", "freq")
-        .withColumn(
-            "rank",
-            F.row_number().over(Window.partitionBy("query_id").orderBy(*order)).cast("long"),
-        )
-        .filter(F.col("rank") <= size)
+    return _expand_capped(dictionary, queries, size, order, keys).select(
+        "query_id",
+        F.col("term").alias("suggestion"),
+        "score",
+        F.col("df").cast("long").alias("freq"),
+        F.col("rn").cast("long").alias("rank"),
     )

@@ -39,8 +39,12 @@ def _cap_partition_distinct(cap: int):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         seen: set = set()
         for pdf in batches:
+            # past the cap the rest of the input is drained, not left
+            # unread: a Python worker whose input is not fully consumed
+            # is not returned to the reuse pool, and the next task pays
+            # a fresh worker's start-up and imports
             if len(seen) >= cap:
-                break
+                continue
             # vectorized per batch (no per-term Python loop): first-seen
             # order within the batch is preserved by pd.unique, so the
             # cap cut is the same one the old loop made

@@ -1,39 +1,35 @@
-"""Wildcard queries: capped pattern expansion + BM25 scoring.
+"""Wildcard queries: pattern translation for the shared capped
+expansion.
 
 ES's ``wildcard`` query expands a ``*`` (any sequence) / ``?`` (any
 char) pattern against the term dictionary and runs the expanded
 disjunction (Lucene WildcardQuery — an automaton intersection over the
-term dictionary). Spark-first (see ``prefix.py`` / ``fuzzy.py`` for
-the same relationship to the reference, which is a facet pack with no
-query types of its own):
+term dictionary). The reference is a facet pack with no query types of
+its own; the expansion plan, its cap and its BM25 scoring are
+:func:`prefix._expand_capped` / :func:`prefix._expanded_topk`. This
+module keeps only what is wildcard-specific:
 
 - the pattern translates to a SQL ``LIKE`` (``*``→``%``, ``?``→``_``,
   pre-existing ``\\ % _`` backslash-escaped) — a codegen'd JVM
-  expression, one dictionary scan for the whole query batch;
-- a pattern with a literal prefix (chars before the first wildcard)
-  additionally contributes a pushable OR-of-``startswith`` prefilter,
-  so on a persisted index the parquet dictionary scan skips row groups
-  the way Lucene's automaton seeks to the prefix-anchored dictionary
-  range; a LEADING wildcard gets no such anchor — the scan is then the
-  full dictionary, which is exactly why ES documentation warns against
-  leading wildcards (we inherit the same cost model, not a worse one);
-- expansion is capped per query at ``max_expansions`` in term order
-  (deterministic), and scoring reuses ``bm25.score_queries`` on the
-  expanded term lists — bool-OR semantics, each term at its own idf,
-  with WAND / tombstones / bucket pruning inherited.
+  expression;
+- the chars before the first wildcard are the query's literal anchor;
+  a LEADING wildcard has none, so its batch scans the full dictionary,
+  which is exactly why ES documentation warns against leading
+  wildcards (we inherit the same cost model, not a worse one).
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bm25 import score_queries
 from .postings import InvertedIndex
-
-DEFAULT_MAX_EXPANSIONS = 50  # Lucene's max_expansions default
+from .prefix import (
+    DEFAULT_MAX_EXPANSIONS,
+    _expand_capped,
+    _expanded_topk,
+    _expansion_lists,
+)
 
 
 def to_like(pattern: str) -> str:
@@ -65,42 +61,6 @@ def _validated(queries: list[tuple[int, str]]) -> list[tuple[int, str]]:
     return [(int(qid), str(p)) for qid, p in queries]
 
 
-def _expansion_df(
-    index: InvertedIndex,
-    queries: list[tuple[int, str]],
-    max_expansions: int,
-) -> DataFrame:
-    """The capped expansion as a DataFrame (collected by
-    :func:`wildcard_expand`; exposed separately so the plan is
-    auditable)."""
-    dictionary = index.dictionary
-    prefixes = [literal_prefix(p) for _, p in queries]
-    if all(prefixes):
-        # every pattern is prefix-anchored: one pushable conjunct
-        dictionary = dictionary.filter(
-            reduce(lambda a, b: a | b, [F.col("term").startswith(p) for p in prefixes])
-        )
-    conds = [F.col("term").like(to_like(p)) for _, p in queries]
-    cells = [
-        F.when(cond, F.lit(qid).cast("long"))
-        for cond, (qid, _) in zip(conds, queries)
-    ]
-    return (
-        dictionary.filter(reduce(lambda a, b: a | b, conds))
-        .select(
-            "term",
-            F.explode(F.filter(F.array(*cells), lambda x: x.isNotNull())).alias(
-                "query_id"
-            ),
-        )
-        .withColumn(
-            "rn", F.row_number().over(Window.partitionBy("query_id").orderBy("term"))
-        )
-        .filter(F.col("rn") <= max_expansions)
-        .select("query_id", "term")
-    )
-
-
 def wildcard_expand(
     index: InvertedIndex,
     queries: list[tuple[int, str]],
@@ -108,14 +68,13 @@ def wildcard_expand(
 ) -> list[tuple[int, list[str]]]:
     """Expand each (query_id, pattern): the first ``max_expansions``
     matching dictionary terms in term order. No-match queries → []."""
-    if max_expansions < 1:
-        raise ValueError(f"max_expansions must be >= 1, got {max_expansions}")
-    queries = _validated(queries)
-    matches = _expansion_df(index, queries, max_expansions).collect()
-    out: dict[int, list[str]] = {qid: [] for qid, _ in queries}
-    for r in sorted(matches, key=lambda r: (r["query_id"], r["term"])):
-        out[int(r["query_id"])].append(r["term"])
-    return [(qid, terms) for qid, terms in out.items()]
+    queries = [
+        (qid, F.col("term").like(to_like(p)), literal_prefix(p))
+        for qid, p in _validated(queries)
+    ]
+    return _expansion_lists(
+        _expand_capped(index.dictionary, queries, max_expansions), queries
+    )
 
 
 def wildcard_topk(
@@ -128,14 +87,6 @@ def wildcard_topk(
     """BM25 top-k for wildcard queries: (query_id, doc_id, score, rank).
     Scores exactly like ``score_queries`` on the expanded term list
     (bool-OR); no-match patterns yield no rows."""
-    expanded = [
-        (qid, ts)
-        for qid, ts in wildcard_expand(index, queries, max_expansions)
-        if ts
-    ]
-    if not expanded:
-        spark = index.postings.sparkSession
-        return spark.createDataFrame(
-            [], "query_id long, doc_id long, score double, rank long"
-        )
-    return score_queries(index, expanded, k, prune=prune)
+    return _expanded_topk(
+        index, wildcard_expand(index, queries, max_expansions), k, prune
+    )

@@ -86,12 +86,14 @@ from ..operators.bm25 import bool_should_topk, score_queries
 from ..operators.fuzzy import fuzzy_topk
 from ..operators.mlt import mlt_topk
 from ..operators.postings import InvertedIndex
-from ..operators.prefix import prefix_topk
+from ..operators.prefix import DEFAULT_MAX_EXPANSIONS, MAX_EDITS, prefix_topk
 from ..operators.regexp import regexp_topk
 from ..operators.wildcard import wildcard_topk
 from .request_parser import lower_filter
 
 DEFAULT_SIZE = 10  # the ES default
+# leaf queries whose only key is the pattern ``value``
+_EXPANDING = {"prefix": prefix_topk, "wildcard": wildcard_topk, "regexp": regexp_topk}
 
 
 def _analyze(text: str) -> list[str]:
@@ -105,6 +107,20 @@ def _field_body(clause_body: dict[str, Any], kind: str) -> tuple[str, Any]:
         raise ValueError(f"{kind} query must name exactly one field, got {sorted(clause_body)}")
     ((fld, spec),) = clause_body.items()
     return fld, spec
+
+
+def _spec_value(spec: Any, kind: str, key: str, options: set[str]) -> Any:
+    """A leaf query's value: the bare form, or ``spec[key]`` of the
+    object form. Keys other than ``key`` and ``options`` raise rather
+    than being dropped."""
+    if not isinstance(spec, dict):
+        return spec
+    if key not in spec:
+        raise ValueError(f"{kind} query requires {key!r}")
+    unknown = set(spec) - options - {key}
+    if unknown:
+        raise ValueError(f"{kind} query: unsupported option(s) {sorted(unknown)}")
+    return spec[key]
 
 
 def _rank(hits: DataFrame, k: int) -> DataFrame:
@@ -161,15 +177,10 @@ def _scored_hits(
 
     if kind == "match":
         fld, spec = _field_body(body, "match")
-        if isinstance(spec, str):
-            text, operator, msm = spec, "or", None
-        else:
-            unknown = set(spec) - {"query", "operator", "minimum_should_match"}
-            if unknown:
-                raise ValueError(f"match query: unsupported option(s) {sorted(unknown)}")
-            text = spec["query"]
-            operator = spec.get("operator", "or").lower()
-            msm = spec.get("minimum_should_match")
+        text = _spec_value(spec, "match", "query", {"operator", "minimum_should_match"})
+        opts = spec if isinstance(spec, dict) else {}
+        operator = opts.get("operator", "or").lower()
+        msm = opts.get("minimum_should_match")
         terms = _analyze(text)
         if not terms:
             raise ValueError("match query analyzed to zero terms")
@@ -187,40 +198,31 @@ def _scored_hits(
         from ..operators.phrase import phrase_topk
 
         fld, spec = _field_body(body, "match_phrase")
-        text = spec if isinstance(spec, str) else spec["query"]
+        text = _spec_value(spec, "match_phrase", "query", {"slop"})
+        if isinstance(spec, dict) and spec.get("slop", 0) != 0:
+            raise ValueError("match_phrase query: slop > 0 is not supported")
         return phrase_topk(index, tokens, [(0, _analyze(text))], k)
 
-    if kind == "prefix":
-        fld, spec = _field_body(body, "prefix")
-        val = spec if isinstance(spec, str) else spec["value"]
-        return prefix_topk(index, [(0, val)], k, prune=prune)
+    if kind in _EXPANDING:
+        fld, spec = _field_body(body, kind)
+        val = _spec_value(spec, kind, "value", set())
+        return _EXPANDING[kind](index, [(0, val)], k, prune=prune)
 
     if kind == "fuzzy":
         fld, spec = _field_body(body, "fuzzy")
-        if isinstance(spec, str):
-            return fuzzy_topk(index, [(0, spec)], k, prune=prune)
-        unknown = set(spec) - {"value", "fuzziness", "prefix_length", "max_expansions"}
-        if unknown:
-            raise ValueError(f"fuzzy query: unsupported option(s) {sorted(unknown)}")
+        val = _spec_value(
+            spec, "fuzzy", "value", {"fuzziness", "prefix_length", "max_expansions"}
+        )
+        opts = spec if isinstance(spec, dict) else {}
         return fuzzy_topk(
             index,
-            [(0, spec["value"])],
+            [(0, val)],
             k,
-            fuzziness=int(spec.get("fuzziness", 2)),
-            prefix_length=int(spec.get("prefix_length", 0)),
-            max_expansions=int(spec.get("max_expansions", 50)),
+            fuzziness=int(opts.get("fuzziness", MAX_EDITS)),
+            prefix_length=int(opts.get("prefix_length", 0)),
+            max_expansions=int(opts.get("max_expansions", DEFAULT_MAX_EXPANSIONS)),
             prune=prune,
         )
-
-    if kind == "wildcard":
-        fld, spec = _field_body(body, "wildcard")
-        val = spec if isinstance(spec, str) else spec["value"]
-        return wildcard_topk(index, [(0, val)], k, prune=prune)
-
-    if kind == "regexp":
-        fld, spec = _field_body(body, "regexp")
-        val = spec if isinstance(spec, str) else spec["value"]
-        return regexp_topk(index, [(0, val)], k, prune=prune)
 
     if kind == "more_like_this":
         unknown = set(body) - {
@@ -338,13 +340,8 @@ def _scored_hits(
 
     if kind == "term":
         fld, spec = _field_body(body, "term")
-        if isinstance(spec, dict):
-            unknown = set(spec) - {"value", "boost"}
-            if unknown:
-                raise ValueError(f"term query: unsupported option(s) {sorted(unknown)}")
-            val, boost = str(spec["value"]), float(spec.get("boost", 1.0))
-        else:
-            val, boost = str(spec), 1.0
+        val = str(_spec_value(spec, "term", "value", {"boost"}))
+        boost = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
         if boost == 1.0:
             return score_queries(index, [(0, [val])], k, prune=prune)
         # boost rescales AFTER the 6-dp rounding the scorer applies, and

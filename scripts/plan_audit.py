@@ -378,52 +378,48 @@ def main() -> None:
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython"],
     )
 
-    # 15. fuzzy expansion with prefix_length: the OR-of-startswith
-    # prefilter must reach the persisted dictionary's parquet scan
-    # (the levenshtein conjuncts are not translatable, so this separate
-    # pushable conjunct is what keeps a billion-term dictionary from a
-    # full scan); no Python node, no product
-    from elasticsearch_approx_plugin_spark.operators.fuzzy import _expansion_df
+    # 15-17. term expansion: every literal anchor must reach the
+    # persisted dictionary's parquet scan as one OR of StringStartsWith
+    # (the LIKE / RLIKE / levenshtein matches are not translatable, so
+    # this separate pushable conjunct is what keeps a billion-term
+    # dictionary from a full scan); no Python node, no product. Each
+    # operator is audited on the frame it builds through the shared
+    # prefix._expand_capped. A leading-wildcard pattern correctly
+    # forfeits the anchor (Lucene's cost model), so the batches here
+    # are all anchored.
+    from elasticsearch_approx_plugin_spark.operators import fuzzy, prefix, regexp, wildcard
 
-    audit(
-        "fuzzy_expansion_pushdown",
-        _expansion_df(
-            pidx, [(0, "tabel"), (1, "scan")], fuzziness=2, prefix_length=2,
-            max_expansions=3,
-        ),
-        must=["PushedFilters: [Or(StringStartsWith(term,ta),StringStartsWith(term,sc))"],
-        must_not=["CartesianProduct", "BatchEvalPython", "ArrowEvalPython"],
-    )
+    def expansion_frame(module, expand, *args, **kwargs):
+        real, frames = prefix._expand_capped, []
 
-    # 16. wildcard expansion: prefix-anchored patterns contribute a
-    # pushable startswith anchor ahead of the (non-pushable) LIKE;
-    # audited on an anchored batch — a leading-wildcard pattern
-    # correctly forfeits the anchor (Lucene's cost model)
-    from elasticsearch_approx_plugin_spark.operators.wildcard import (
-        _expansion_df as _wc_expansion_df,
-    )
+        def capture(*a, **kw):
+            frames.append(real(*a, **kw))
+            return frames[-1]
 
-    audit(
-        "wildcard_expansion_anchor",
-        _wc_expansion_df(pidx, [(0, "ta*le"), (1, "sc?n")], 3),
-        must=["PushedFilters: [Or(StringStartsWith(term,ta),StringStartsWith(term,sc))"],
-        must_not=["CartesianProduct", "BatchEvalPython", "ArrowEvalPython"],
-    )
+        module._expand_capped = capture
+        try:
+            expand(*args, **kwargs)
+        finally:
+            module._expand_capped = real
+        return frames[0]
 
-    # 17. regexp expansion: the literal-prefix scan anchor must reach
-    # the persisted dictionary's parquet scan (RLIKE itself is not
-    # pushable — the anchor is the automaton common-prefix seek analog);
-    # no Python node, no product
-    from elasticsearch_approx_plugin_spark.operators.regexp import (
-        _expansion_df as _re_expansion_df,
-    )
-
-    audit(
-        "regexp_expansion_anchor",
-        _re_expansion_df(pidx, [(0, "ta.le"), (1, "sc(a|u)n")], 3),
-        must=["PushedFilters: [Or(StringStartsWith(term,ta),StringStartsWith(term,sc))"],
-        must_not=["CartesianProduct", "BatchEvalPython", "ArrowEvalPython"],
-    )
+    for name, frame in (
+        ("prefix_expansion_pushdown", expansion_frame(
+            prefix, prefix.prefix_expand, pidx, [(0, "ta"), (1, "sc")], 3)),
+        ("fuzzy_expansion_pushdown", expansion_frame(
+            fuzzy, fuzzy.fuzzy_expand, pidx, [(0, "tabel"), (1, "scan")],
+            fuzziness=2, prefix_length=2, max_expansions=3)),
+        ("wildcard_expansion_anchor", expansion_frame(
+            wildcard, wildcard.wildcard_expand, pidx, [(0, "ta*le"), (1, "sc?n")], 3)),
+        ("regexp_expansion_anchor", expansion_frame(
+            regexp, regexp.regexp_expand, pidx, [(0, "ta.le"), (1, "sc(a|u)n")], 3)),
+    ):
+        audit(
+            name,
+            frame,
+            must=["PushedFilters: [Or(StringStartsWith(term,ta),StringStartsWith(term,sc))"],
+            must_not=["CartesianProduct", "BatchEvalPython", "ArrowEvalPython"],
+        )
 
     # 18. more_like_this selection: the tiny liked-term table must
     # broadcast INTO the dictionary join (never shuffle the dictionary

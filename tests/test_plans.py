@@ -3,15 +3,31 @@ operators survive 100 TB, frozen as assertions so a refactor can't
 silently regress them. (Scan-level checks — PushedFilters, partition
 pruning, ReadSchema — live next to their operators' tests.)"""
 
+import importlib
+
+import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_approx_plugin_spark.functions.tokenize import tokenize_ws
+from elasticsearch_approx_plugin_spark.operators import prefix
 from elasticsearch_approx_plugin_spark.operators.ann import cosine_topk
 from elasticsearch_approx_plugin_spark.operators.dedup import dedup_exact, simhash
+from elasticsearch_approx_plugin_spark.operators.postings import (
+    build_index,
+    read_index,
+    write_index,
+)
 from elasticsearch_approx_plugin_spark.operators.text_analysis import (
     add_quality_features,
     lang_id,
 )
+
+
+def _formatted(df):
+    spark = df.sparkSession
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
 
 
 def _simple(df):
@@ -19,6 +35,55 @@ def _simple(df):
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
+
+
+@pytest.fixture(scope="module")
+def persisted_index(spark, sf_dir, tmp_path_factory):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    toks = docs.select("doc_id", tokenize_ws("text").alias("tokens"))
+    path = str(tmp_path_factory.mktemp("persisted_index"))
+    write_index(build_index(toks, range_bits=9), path, n_buckets=8)
+    return read_index(spark, path)
+
+
+@pytest.mark.parametrize(
+    "module, expand",
+    [
+        ("prefix", lambda m, idx: m.prefix_expand(idx, [(0, "ta"), (1, "sc")], 3)),
+        (
+            "wildcard",
+            lambda m, idx: m.wildcard_expand(idx, [(0, "ta*le"), (1, "sc?n")], 3),
+        ),
+        (
+            "regexp",
+            lambda m, idx: m.regexp_expand(idx, [(0, "ta.le"), (1, "sc(a|u)n")], 3),
+        ),
+        (
+            "fuzzy",
+            lambda m, idx: m.fuzzy_expand(
+                idx, [(0, "tabel"), (1, "scan")], 2, prefix_length=2, max_expansions=3
+            ),
+        ),
+    ],
+)
+def test_expansion_anchor_pushdown(persisted_index, monkeypatch, module, expand):
+    """Each expanding operator's literal anchors reach the persisted
+    dictionary's parquet scan as one pushed OR of StringStartsWith (its
+    LIKE / RLIKE / levenshtein match cannot be pushed), and the shared
+    expansion stays JVM-side with no product."""
+    mod = importlib.import_module(f"elasticsearch_approx_plugin_spark.operators.{module}")
+    real, frames = prefix._expand_capped, []
+
+    def capture(*args, **kwargs):
+        frames.append(real(*args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(mod, "_expand_capped", capture)
+    expand(mod, persisted_index)
+    plan = _formatted(frames[0])
+    assert "PushedFilters: [Or(StringStartsWith(term,ta),StringStartsWith(term,sc))" in plan
+    for node in ("BatchEvalPython", "ArrowEvalPython", "CartesianProduct"):
+        assert node not in plan
 
 
 def test_dedup_exact_partial_aggregation(spark, sf_dir):

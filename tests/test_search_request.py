@@ -182,9 +182,30 @@ def test_highlight_rides_hits(index, docs):
     assert out[3] == "<em>table</em> <em>join</em> <em>table</em> <em>join</em>"
 
 
-def test_strictness(index, docs):
+def test_strictness(index, docs, tokens):
     with pytest.raises(ValueError):
         search_topk(index, {"query": {"match": {"text": "x"}}, "explain": True})
+    # leaf-query options the engine does not implement raise instead of
+    # being dropped, and an object body without its value is a
+    # ValueError, not a KeyError
+    for query in (
+        {"prefix": {"text": {"value": "ta", "boost": 2.0}}},
+        {"wildcard": {"text": {"value": "ta*", "rewrite": "top_terms_10"}}},
+        {"regexp": {"text": {"value": "ta.*", "flags": "ALL"}}},
+        {"prefix": {"text": {"prefix": "ta"}}},
+        {"wildcard": {"text": {}}},
+        {"fuzzy": {"text": {"fuzziness": 1}}},
+        {"match": {"text": {"operator": "and"}}},
+        {"term": {"text": {"boost": 2.0}}},
+        {"match_phrase": {"text": {"query": "hash join", "slop": 2}}},
+        {"match_phrase": {"text": {"slop": 0}}},
+    ):
+        with pytest.raises(ValueError):
+            search_topk(index, {"query": query}, tokens=tokens)
+    phrase = {"match_phrase": {"text": {"query": "hash join", "slop": 0}}}
+    assert _rows(search_topk(index, {"query": phrase}, tokens=tokens)) == _rows(
+        search_topk(index, {"query": {"match_phrase": {"text": "hash join"}}}, tokens=tokens)
+    )
     with pytest.raises(ValueError):
         search_topk(index, {"query": {"span_near": {"clauses": []}}})
     with pytest.raises(ValueError):

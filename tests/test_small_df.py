@@ -12,10 +12,13 @@ serving operator's hot path; these tests freeze its two contracts:
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from elasticsearch_approx_plugin_spark.functions.small_df import (
     _ROWS_PER_SLICE,
+    _json_cell,
     small_df,
     width_partitioned,
 )
@@ -81,6 +84,22 @@ def test_oversized_list_falls_back(spark):
     df = small_df(spark, [(i,) for i in range(n)], "i long")
     assert "Scan ExistingRDD" in _physical(df)
     assert df.count() == n
+
+
+def test_mistyped_values_are_rejected(spark):
+    """A str/bytes for an array column is not split into characters and
+    a bool for a float column is not read as 1.0: the encoder raises,
+    and the fallback path's schema check rejects the row too."""
+    for row, schema in (
+        (("ab",), "phrase array<string>"),
+        ((b"ab",), "phrase array<string>"),
+        ((True,), "v double"),
+        ((False,), "v float"),
+    ):
+        with pytest.raises(TypeError):
+            _json_cell(row, StructType.fromDDL(schema))
+        with pytest.raises(Exception):
+            small_df(spark, [row], schema).collect()
 
 
 def test_empty_rows(spark):

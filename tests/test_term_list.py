@@ -156,3 +156,26 @@ def test_term_list_post_visible_docs_only(spark):
     assert got4 == exp
     idx.postings.unpersist()
     toks.unpersist()
+
+
+def test_capped_partition_drains_its_input():
+    """Past the cap the per-partition pass still reads every batch (a
+    Python worker left with unread input is not reused), and the cut
+    stays the first-seen one."""
+    import pandas as pd
+
+    from elasticsearch_approx_plugin_spark.operators.term_list import (
+        _cap_partition_distinct,
+    )
+
+    batches = [["b", "a", "b"], ["c", "a", "d"], ["e"], ["f", "g"]]
+    consumed = []
+
+    def feed():
+        for i, terms in enumerate(batches):
+            consumed.append(i)
+            yield pd.DataFrame({"term": terms})
+
+    out = list(_cap_partition_distinct(3)(feed()))
+    assert consumed == [0, 1, 2, 3]
+    assert [list(o["term"]) for o in out] == [["a", "b", "c"]]
