@@ -6,8 +6,8 @@ facet plugin (date histograms with exact-then-HyperLogLog distinct
 counts, fast term lists — see SURVEY.md); this repo re-expresses those
 capabilities, plus a full inverted-index build + BM25 top-k query
 engine over a source-code corpus, as idiomatic PySpark DataFrame
-pipelines: declarative plans for Catalyst, Arrow-vectorized pandas
-UDFs where Spark lacks the operator, mergeable sketch states carried
+pipelines: declarative plans for Catalyst, Arrow-vectorized UDFs
+where Spark lacks the operator, mergeable sketch states carried
 as BinaryType through ordinary partial/final aggregation.
 
 Layout
@@ -15,7 +15,8 @@ Layout
 - ``sources``    deterministic corpus generator, parquet table loaders
 - ``functions``  tokenizers, varint codecs, HyperLogLog, CountThenEstimate
 - ``operators``  date facets, distinct-count agg, term lists, postings
-                 build, BM25 top-k, dedup, ANN, text analysis, multimodal
+                 build, BM25 top-k, dedup, ANN, text analysis, binary
+                 media byte stats
 - ``plans``      dataclass query specs (the reference's builder API analog)
 - ``streaming``  Structured Streaming variants of the facet aggregations
 """

@@ -1,10 +1,11 @@
 """BM25 top-k query engine over the salted posting lists.
 
 Document-at-a-time scoring, distributed by doc range: each
-``(query_id, range_id)`` group scores its range's candidates with one
-vectorized numpy pass (decode varints → per-term contributions →
-``np.add.at`` accumulation in sorted-term order → local top-k), then a
-global window keeps the exact top-k. Per-range top-k ⊇ the global
+``range_id`` group scores its range's candidates for every query with
+one vectorized numpy pass over Arrow (one flat posting decode →
+per-posting contribution ``idf * tfnorm`` → accumulation in
+sorted-term order → local top-k), then a global window keeps the exact
+top-k. Per-range top-k ⊇ the global
 winners inside that range, so the merge is exact — the same
 partial/reduce shape as the reference's shard facets
 (``README.md:289-299`` in /root/reference).
@@ -12,7 +13,10 @@ partial/reduce shape as the reference's shard facets
 Determinism (north rule: rank-identical docIDs + scores at N vs 4N
 parallelism): scores accumulate per doc in *sorted term order* with
 float64, ranges are pure functions of doc_id, and ties break on
-doc_id — nothing depends on physical partitioning.
+doc_id — nothing depends on physical partitioning. The exhaustive
+scorer and the WAND walk compute contributions with the same
+expression in the same order (:func:`_accumulate`), so a doc's score
+is the same float on either path.
 
 Block-max metadata (``max_tfnorm``) gives every ``(query, range)`` an
 upper bound ``Σ idf·max_tfnorm`` before any varint is decoded; ranges
@@ -30,14 +34,13 @@ import math
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.small_df import small_df
-from ..functions.varint import delta_varint_decode, varint_decode
-from .postings import InvertedIndex, cache_term_stats, cache_terms
+from .postings import InvertedIndex, _col, _decode_postings, cache_term_stats, cache_terms
 
 SCORE_DECIMALS = 6  # scores are rounded for ordering/compare stability
 
@@ -59,13 +62,67 @@ def _topk_select(uniq: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
     return cand[np.lexsort((uniq[cand], -scores[cand]))[:k]]
 
 
-def _make_scorer(k1: float, b: float, avgdl: float, k: int, tomb=None, msm=None):
-    """Scores one doc range for ALL queries in the batch.
+def _tfnorm_rows(tbl: pa.Table, dead, k1: float, b: float, avgdl: float):
+    """Decode ``tbl``'s posting rows in one flat pass → (doc ids, BM25
+    tf-components, row offsets). Tombstoned docs (``dead``: sorted
+    int64 ids, or None) drop with ONE ``isin`` over the flat ids; the
+    offsets shrink with them."""
+    ids, tf, dl, offs = _decode_postings(tbl)
+    tf = tf.astype(np.float64)
+    dl = dl.astype(np.float64)
+    tfnorm = (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+    if dead is not None:
+        live = ~np.isin(ids, dead)
+        ids, tfnorm = ids[live], tfnorm[live]
+        offs = np.r_[0, np.cumsum(live)][offs]
+    return ids, tfnorm, offs
 
-    Each (term, range) posting row is varint-decoded exactly once and
-    its tf-component cached; queries then gather their terms' arrays in
-    sorted-term order (fixed float accumulation order ⇒ deterministic
-    scores at any parallelism) and keep a local top-k.
+
+def _accumulate(ids, tfnorm, offs, rows, qids, idf):
+    """Per-(query, doc) BM25 sums over decoded posting rows — the one
+    scoring expression both scorers share.
+
+    Entry j of (``rows``, ``qids``, ``idf``) adds ``idf[j] * tfnorm``
+    to every doc of decoded row ``rows[j]``. Entries arrive sorted by
+    (query, term) and ``bincount`` adds in input order, so each doc's
+    sum accumulates in sorted-term order: the same float bits at any
+    parallelism and in either scorer. Returns (query, doc, score
+    rounded to SCORE_DECIMALS, matched-term count), ordered by (query,
+    doc)."""
+    lens = offs[rows + 1] - offs[rows]
+    ends = np.cumsum(lens)
+    pos = np.arange(ends[-1] if ends.size else 0) + np.repeat(offs[rows] - ends + lens, lens)
+    qs, docs = np.repeat(qids, lens), ids[pos]
+    contrib = np.repeat(idf, lens) * tfnorm[pos]
+    # one int64 key (query rank, doc) when it fits: a stable argsort
+    # over the per-row sorted runs is ~30x faster than a 2-key lexsort
+    if qs.size:
+        lo = docs.min()
+        span = int(docs.max() - lo) + 1
+        qrank = np.cumsum(np.r_[0, qs[1:] != qs[:-1]])
+    if qs.size and (int(qrank[-1]) + 1) * span < 1 << 62:
+        order = np.argsort(qrank * span + (docs - lo), kind="stable")
+    else:
+        order = np.lexsort((docs, qs))
+    qo, do = qs[order], docs[order]
+    new = np.ones(order.size, dtype=bool)
+    new[1:] = (qo[1:] != qo[:-1]) | (do[1:] != do[:-1])
+    grp = np.empty(order.size, dtype=np.int64)
+    grp[order] = np.cumsum(new) - 1
+    n = int(new.sum())
+    scores = np.bincount(grp, weights=contrib, minlength=n)
+    return qo[new], do[new], np.round(scores, SCORE_DECIMALS), np.bincount(grp, minlength=n)
+
+
+def _make_scorer(k1: float, b: float, avgdl: float, k: int, tomb=None, msm=None):
+    """Scores one doc range for ALL queries in the batch
+    (``applyInArrow`` body over a ``range_id`` group).
+
+    Each (term, range) posting row is decoded exactly once — all of the
+    group's distinct terms in one flat pass — and queries then gather
+    their terms' postings in sorted-term order (fixed float
+    accumulation order ⇒ deterministic scores at any parallelism) and
+    keep a local top-k.
 
     ``tomb`` is an optional broadcast of ``{range_id: sorted int64
     tombstone ids}`` — shipped once per executor instead of riding
@@ -75,67 +132,33 @@ def _make_scorer(k1: float, b: float, avgdl: float, k: int, tomb=None, msm=None)
     ``msm`` (optional ``{query_id: m}``) enforces ES bool-should
     ``minimum_should_match``: a doc must match >= m DISTINCT query
     terms to be a candidate. The match-count accumulates in the same
-    ``np.add.at`` pass as the scores (each term's postings list a doc
-    at most once), and because a doc's postings for ALL terms live in
-    its one range (``range_id = doc_id >> range_bits``), the per-range
-    count is the global count — filtering before the local top-k stays
-    exact.
+    pass as the scores (each term's postings list a doc at most once),
+    and because a doc's postings for ALL terms live in its one range
+    (``range_id = doc_id >> range_bits``), the per-range count is the
+    global count — filtering before the local top-k stays exact.
     """
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        dead = tomb.value.get(int(pdf["range_id"].iloc[0])) if tomb else None
-        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        by_term = pdf.drop_duplicates("term")
-        for term, doc_b, tf_b, dl_b in zip(
-            by_term["term"], by_term["doc_ids"], by_term["tfs"], by_term["dls"]
-        ):
-            doc_ids = delta_varint_decode(doc_b)
-            tfs = varint_decode(tf_b).astype(np.float64)
-            dls = varint_decode(dl_b).astype(np.float64)
-            if dead is not None:
-                live = ~np.isin(doc_ids.view(np.int64), dead)
-                doc_ids, tfs, dls = doc_ids[live], tfs[live], dls[live]
-            decoded[term] = (
-                doc_ids,
-                (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / avgdl)),
-            )
-        # ONE stable sort replaces the per-query pandas groupby + sort:
-        # with q queries x r ranges the old loop ran q pandas sorts per
-        # range-group (profiled: 3.5 s of scorer CPU per full pass of
-        # which only 0.77 s was varint decode).  Row order per query is
-        # IDENTICAL (query_id asc, term asc — one row per (query, term)
-        # in a range-group), so the float accumulation order and the
-        # scores are bit-for-bit unchanged.
-        spdf = pdf.sort_values(["query_id", "term"], kind="stable")
-        qarr = spdf["query_id"].to_numpy()
-        tarr = spdf["term"].to_numpy()
-        iarr = spdf["idf"].to_numpy()
-        bounds = np.flatnonzero(np.r_[True, qarr[1:] != qarr[:-1]])
-        out_q, out_id, out_s = [], [], []
-        for bi, start in enumerate(bounds):
-            end = bounds[bi + 1] if bi + 1 < bounds.size else qarr.size
-            qid = int(qarr[start])
-            ids_parts = [decoded[t][0] for t in tarr[start:end]]
-            contrib_parts = [
-                idf * decoded[t][1]
-                for t, idf in zip(tarr[start:end], iarr[start:end])
-            ]
-            all_ids = np.concatenate(ids_parts)
-            uniq, inv = np.unique(all_ids, return_inverse=True)
-            scores = np.zeros(uniq.size, dtype=np.float64)
-            np.add.at(scores, inv, np.concatenate(contrib_parts))
-            scores = np.round(scores, SCORE_DECIMALS)
-            m = msm.get(qid, 1) if msm else 1
+    def score_group(tbl: pa.Table) -> pa.Table:
+        dead = tomb.value.get(tbl["range_id"][0].as_py()) if tomb else None
+        _, first, tcode = np.unique(
+            _col(tbl, "term"), return_index=True, return_inverse=True
+        )
+        decoded = _tfnorm_rows(tbl.take(first), dead, k1, b, avgdl)
+        qids = _col(tbl, "query_id", np.int64)
+        order = np.lexsort((tcode, qids))
+        q, docs, scores, n_terms = _accumulate(
+            *decoded, tcode[order], qids[order], _col(tbl, "idf")[order]
+        )
+        bounds = np.flatnonzero(np.r_[True, q[1:] != q[:-1]]) if q.size else q
+        sel = []
+        for s, e in zip(bounds, np.r_[bounds[1:], q.size]):
+            keep = np.arange(s, e)
+            m = msm.get(int(q[s]), 1) if msm else 1
             if m > 1:
-                counts = np.zeros(uniq.size, dtype=np.int64)
-                np.add.at(counts, inv, 1)
-                keep = counts >= m
-                uniq, scores = uniq[keep], scores[keep]
-            sel = _topk_select(uniq, scores, k)
-            out_q.extend([qid] * sel.size)
-            out_id.extend(uniq[sel].astype(np.int64).tolist())
-            out_s.extend(scores[sel].tolist())
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_id, "score": out_s})
+                keep = keep[n_terms[s:e] >= m]
+            sel.append(keep[_topk_select(docs[keep], scores[keep], k)])
+        sel = np.concatenate(sel) if sel else np.empty(0, dtype=np.int64)
+        return pa.table({"query_id": q[sel], "doc_id": docs[sel], "score": scores[sel]})
 
     return score_group
 
@@ -143,89 +166,67 @@ def _make_scorer(k1: float, b: float, avgdl: float, k: int, tomb=None, msm=None)
 def _make_wand_scorer(
     k1: float, b: float, avgdl: float, k: int, ub_scale: float = 1.0, tomb=None
 ):
-    """One query's block-max WAND walk, inside a single task.
+    """One query's block-max WAND walk, inside a single task
+    (``applyInArrow`` body over a ``query_id`` group).
 
     Ranges visit in (ub desc, range_id asc) order; a running top-k
     threshold τ stops the walk at the first range whose metadata bound
     cannot reach τ (later ranges have smaller bounds still) — its
-    varints are never decoded. Per visited range, scoring is the same
-    vectorized sorted-term accumulation as the exhaustive scorer, so
-    per-doc scores are bit-identical and the final top-k equals the
-    exhaustive result (τ compares with the rounding-grid slack; only
-    over-includes). Emits the per-query (ranges_total, ranges_scored)
-    skip accounting on every output row. ``ub_scale`` (≥ 1) widens the
-    metadata bounds after index appends whose avgdl drifted above the
-    bounds' build-time avgdl (see InvertedIndex.bound_avgdl).
+    varints are never decoded: each visited range decodes only its own
+    rows. Per visited range, scoring is the exhaustive scorer's
+    :func:`_accumulate` (contribution ``idf * tfnorm``, sorted-term
+    order), so per-doc scores are the same floats and the final top-k
+    equals the exhaustive result (τ compares with the rounding-grid
+    slack; only over-includes). Emits the per-query (ranges_total,
+    ranges_scored) skip accounting on every output row. ``ub_scale``
+    (≥ 1) widens the metadata bounds after index appends whose avgdl
+    drifted above the bounds' build-time avgdl (see
+    InvertedIndex.bound_avgdl).
     """
     slack = 10.0 ** (-SCORE_DECIMALS)
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        ubs = (
-            pdf.assign(contrib=pdf["idf"] * pdf["max_tfnorm"] * ub_scale)
-            .groupby("range_id")["contrib"]
-            .sum()
-            .sort_index()
-        )
-        order = sorted(ubs.index, key=lambda r: (-ubs[r], r))
-        # one stable sort + numpy slices instead of a per-range pandas
-        # split + per-range sort (same pandas-overhead fix as the
-        # exhaustive scorer; per-range row order — term asc — and
-        # therefore float accumulation order is unchanged)
-        spdf = pdf.sort_values(["range_id", "term"], kind="stable")
-        rarr = spdf["range_id"].to_numpy()
-        cols = tuple(
-            spdf[c].to_numpy() for c in ("term", "idf", "doc_ids", "tfs", "dls")
-        )
-        rstarts = np.flatnonzero(np.r_[True, rarr[1:] != rarr[:-1]])
-        rslice = {}
-        for si, s in enumerate(rstarts):
-            e = rstarts[si + 1] if si + 1 < rstarts.size else rarr.size
-            rslice[int(rarr[s])] = (int(s), int(e))
+    def score_group(tbl: pa.Table) -> pa.Table:
+        qid = tbl["query_id"][0].as_py()
+        # rows in (range_id, term) order: each range is one contiguous
+        # slice whose rows are in sorted-term order
+        _, tcode = np.unique(_col(tbl, "term"), return_inverse=True)
+        rid = _col(tbl, "range_id", np.int64)
+        order = np.lexsort((tcode, rid))
+        tbl, rid = tbl.take(order).combine_chunks(), rid[order]
+        idf = _col(tbl, "idf")
+        ranges, rstart = np.unique(rid, return_index=True)
+        rend = np.r_[rstart[1:], rid.size]
+        ubs = np.add.reduceat(idf * _col(tbl, "max_tfnorm") * ub_scale, rstart)
         best_ids = np.empty(0, dtype=np.int64)
         best_scores = np.empty(0, dtype=np.float64)
         tau = -np.inf
         scored = 0
-        for rid in order:
-            if best_ids.size >= k and ubs[rid] < tau - slack:
+        for r in np.lexsort((ranges, -ubs)):
+            if best_ids.size >= k and ubs[r] < tau - slack:
                 break  # bounds are sorted — nothing below can win
             scored += 1
-            s, e = rslice[int(rid)]
-            dead = tomb.value.get(int(rid)) if tomb else None
-            ids_parts, contrib_parts = [], []
-            for term, idf, doc_b, tf_b, dl_b in zip(
-                cols[0][s:e], cols[1][s:e], cols[2][s:e], cols[3][s:e], cols[4][s:e]
-            ):
-                doc_ids = delta_varint_decode(doc_b)
-                tfs = varint_decode(tf_b).astype(np.float64)
-                dls = varint_decode(dl_b).astype(np.float64)
-                if dead is not None:
-                    live = ~np.isin(doc_ids.view(np.int64), dead)
-                    doc_ids, tfs, dls = doc_ids[live], tfs[live], dls[live]
-                ids_parts.append(doc_ids)
-                contrib_parts.append(
-                    idf * (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                )
-            all_ids = np.concatenate(ids_parts)
-            uniq, inv = np.unique(all_ids, return_inverse=True)
-            scores = np.zeros(uniq.size, dtype=np.float64)
-            np.add.at(scores, inv, np.concatenate(contrib_parts))
-            scores = np.round(scores, SCORE_DECIMALS)
+            s, n = int(rstart[r]), int(rend[r] - rstart[r])
+            dead = tomb.value.get(int(ranges[r])) if tomb else None
+            decoded = _tfnorm_rows(tbl.slice(s, n), dead, k1, b, avgdl)
+            _, uniq, scores, _ = _accumulate(
+                *decoded, np.arange(n), np.full(n, qid), idf[s : s + n]
+            )
             # merge into the running top-k (ranges partition docs, so
             # no doc appears twice)
-            best_ids = np.concatenate([best_ids, uniq.astype(np.int64)])
+            best_ids = np.concatenate([best_ids, uniq])
             best_scores = np.concatenate([best_scores, scores])
             sel = _topk_select(best_ids, best_scores, k)
             best_ids, best_scores = best_ids[sel], best_scores[sel]
             if best_ids.size >= k:
                 tau = best_scores.min()
-        return pd.DataFrame(
+        n = best_ids.size
+        return pa.table(
             {
-                "query_id": qid,
+                "query_id": np.full(n, qid, dtype=np.int64),
                 "doc_id": best_ids,
                 "score": best_scores,
-                "ranges_total": len(order),
-                "ranges_scored": scored,
+                "ranges_total": np.full(n, ranges.size, dtype=np.int64),
+                "ranges_scored": np.full(n, scored, dtype=np.int64),
             }
         )
 
@@ -404,7 +405,7 @@ def score_queries(
             wand_in = matched.filter(~F.col("query_id").isin(sorted(heavy_qids)))
         local = wand_in.repartition(_n_shuffle(spark), "query_id").groupBy(
             "query_id"
-        ).applyInPandas(
+        ).applyInArrow(
             wand, out_schema + ", ranges_total long, ranges_scored long"
         )
         if stats is not None:  # opt-in skip accounting (rows are only q×k)
@@ -427,13 +428,13 @@ def score_queries(
                 matched.filter(F.col("query_id").isin(sorted(heavy_qids)))
                 .repartition(_n_shuffle(spark), "range_id")
                 .groupBy("range_id")
-                .applyInPandas(scorer, out_schema)
+                .applyInArrow(scorer, out_schema)
             )
             local = local.unionByName(heavy)
     else:
         local = matched.repartition(_n_shuffle(spark), "range_id").groupBy(
             "range_id"
-        ).applyInPandas(scorer, out_schema)
+        ).applyInArrow(scorer, out_schema)
 
     if ranked:
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))

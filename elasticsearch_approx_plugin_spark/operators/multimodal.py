@@ -1,13 +1,10 @@
 """Multimodal column plumbing — image/audio/video as opaque binary.
 
-The container has no image/audio codecs, so the *decode* step is a
-clearly-marked stub (`NotImplementedError`) with a deterministic fake
-behind a flag; everything Spark-side is real and tested: the typed
-schema (binary payload + struct metadata), Arrow batch shapes through
-``mapInPandas``, partition-preserving feature extraction, and the
-frame-sampling row expansion.
+A typed media schema (binary payload + struct metadata), a
+deterministic synthetic media table, and per-payload byte statistics
+computed in one numpy pass over the flat Arrow value buffer.
 
-At 100 TB the pattern matters more than the codec: binary columns ride
+At 100 TB the pattern matters more than any codec: binary columns ride
 parquet untouched (no Python until the UDF), metadata predicates prune
 at the scan, and the batch iterator keeps peak memory at
 ``maxRecordsPerBatch × payload`` instead of a partition.
@@ -16,12 +13,9 @@ at the scan, and the batch iterator keeps peak memory at
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -36,36 +30,6 @@ def synth_media(spark, n: int, kind: str = "image") -> DataFrame:
         payload = hashlib.sha256(f"media-{kind}-{i}".encode()).digest() * 4
         rows.append((i, kind, bytearray(payload), (64 + i % 32, 48 + i % 16, 1000 + i, "fake")))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def decode_image(payload: bytes):
-    """REAL DECODE STUB — no codecs in this container.
-
-    Swap in PIL/libvips here on a real cluster; the Spark plumbing
-    around it (schema, batching, partitioning) is what this module
-    tests and does not change.
-    """
-    raise NotImplementedError("image codecs not available in this environment")
-
-
-def decode_image_fake(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Deterministic FAKE decode: tile the payload bytes into an
-    (height, width, 3) uint8 pixel array. Stands in for PIL/libvips so
-    the full decode→resize→featurize plumbing is executable and
-    testable in this codec-less container; the array contract (shape,
-    dtype) is exactly what a real decoder returns."""
-    need = width * height * 3
-    buf = np.frombuffer(payload, dtype=np.uint8)
-    reps = -(-need // max(buf.size, 1))
-    return np.tile(buf, reps)[:need].reshape(height, width, 3)
-
-
-def resize_fake(pixels: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor subsample — the resize step's plumbing."""
-    h, w, _ = pixels.shape
-    yi = (np.arange(out_h) * h // out_h).astype(np.int64)
-    xi = (np.arange(out_w) * w // out_w).astype(np.int64)
-    return pixels[yi][:, xi]
 
 
 def media_byte_stats(
@@ -111,40 +75,4 @@ def media_byte_stats(
 
     return df.select(id_col, payload_col).mapInArrow(
         fn, f"{id_col} long, n_bytes long, mean_millionths long"
-    )
-
-
-def _fake_features(payload: bytes, dim: int) -> np.ndarray:
-    """Deterministic stand-in for decode→embed: hash-seeded vector."""
-    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big")
-    return np.random.default_rng(seed).standard_normal(dim).astype(np.float32)
-
-
-def extract_features(
-    df: DataFrame, dim: int = 16, use_fake_decoder: bool = True
-) -> DataFrame:
-    """payload → feature vector via Arrow-batched mapInPandas."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not use_fake_decoder:
-                decode_image(b"")  # raises: real codecs absent
-            feats = [
-                _fake_features(bytes(p), dim).tolist() for p in pdf["payload"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
-
-    return df.mapInPandas(fn, "media_id long, features array<float>")
-
-
-def sample_frames(df: DataFrame, every_ms: int = 250) -> DataFrame:
-    """Video → frame rows: one row per sampled timestamp (pure Catalyst
-    row expansion; the decode of each frame is the stubbed step)."""
-    return (
-        df.filter(F.col("kind") == "video")
-        .withColumn(
-            "frame_ts_ms",
-            F.explode(F.sequence(F.lit(0), F.col("meta.duration_ms"), F.lit(every_ms))),
-        )
-        .select("media_id", "frame_ts_ms", "payload")
     )

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions.small_df import small_df, spread_small_input, width_partitioned
 from .bm25 import _idf
-from .postings import InvertedIndex, _decode_doc_rows, cache_terms
+from .postings import InvertedIndex, _decode_postings, cache_terms
 from .prefix import DEFAULT_MAX_EXPANSIONS, prefix_expand
 
 
@@ -64,14 +64,10 @@ def _term_doc_pairs(index: InvertedIndex, terms: list[str]) -> DataFrame:
         for b in batches:
             if b.num_rows == 0:
                 continue
-            counts = b.column("df_part").to_numpy()
-            docs = _decode_doc_rows(b.column("doc_ids"), counts)
-            trep = np.repeat(
-                np.asarray(b.column("term").to_pylist(), dtype=object), counts
-            )
+            docs, _, _, offs = _decode_postings(b)
+            rows = np.repeat(np.arange(b.num_rows), np.diff(offs))
             yield pa.record_batch(
-                [pa.array(trep, pa.string()), pa.array(docs.astype("int64"))],
-                names=["term", "doc_id"],
+                [b.column("term").take(rows), pa.array(docs)], names=["term", "doc_id"]
             )
 
     return filtered.mapInArrow(expand, "term string, doc_id long")

@@ -27,10 +27,14 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .postings import _col, _decode_postings
 
 DEFAULT_MAX_PER_PARTITION = 1000
 
@@ -60,6 +64,13 @@ def _cap_partition_distinct(cap: int):
 POST_BROADCAST_MAX_IDS = 5_000_000  # ~40 MB of int64 — same order as bm25's tomb_b
 
 
+def _rows_hitting(tbl, ids: np.ndarray) -> np.ndarray:
+    """Indexes of ``tbl``'s posting rows holding at least one doc of
+    ``ids``: one flat doc-id decode, one membership pass."""
+    docs, _, _, offs = _decode_postings(tbl.select(["df_part", "doc_ids"]))
+    return np.flatnonzero(np.logical_or.reduceat(np.isin(docs, ids), offs[:-1]))
+
+
 def _post_broadcast_terms(match_b, range_bits: int):
     """Vectorized 'does this term have a visible matching doc' test:
     the global sorted match-id array ships ONCE per executor as a
@@ -68,56 +79,27 @@ def _post_broadcast_terms(match_b, range_bits: int):
     before any varint is touched."""
 
     def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from .postings import _decode_doc_rows
-
         match = match_b.value
-        mranges = np.unique(match >> range_bits)
         chunks = list(batches)
         if not chunks:
             return
         tbl = pa.Table.from_batches(chunks)
-        if tbl.num_rows == 0:
-            return
-        rid = tbl["range_id"].combine_chunks().to_numpy(zero_copy_only=False)
-        rows = np.flatnonzero(np.isin(rid.astype(np.int64), mranges))
-        if rows.size == 0:
-            return
-        sub = tbl.take(pa.array(rows))
-        df_row = sub["df_part"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-        abs_doc = _decode_doc_rows(sub["doc_ids"], df_row)
-        hit = np.isin(abs_doc.view(np.int64), match).astype(np.int64)
-        row_starts = np.zeros(df_row.size, dtype=np.int64)
-        np.cumsum(df_row[:-1], out=row_starts[1:])
-        idx = np.flatnonzero(np.add.reduceat(hit, row_starts) > 0)
-        if idx.size:
-            yield from sub.select(["term"]).take(pa.array(idx)).to_batches()
+        in_range = np.isin(_col(tbl, "range_id", np.int64), np.unique(match >> range_bits))
+        sub = tbl.take(np.flatnonzero(in_range))
+        if sub.num_rows:
+            yield from sub.select(["term"]).take(_rows_hitting(sub, match)).to_batches()
 
     return fn
 
 
-def _post_cogroup_terms(post_pdf, match_pdf):
+def _post_cogroup_terms(post, match):
     """Cogroup fallback for match sets too large to broadcast: each
     task receives one range's posting rows AND that range's match ids
     exactly once (never replicated per posting row — the blow-up
     ADVICE r3 flagged in the collect_list join formulation)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from .postings import _decode_doc_rows
-
-    if not len(post_pdf) or not len(match_pdf):
-        return pd.DataFrame({"term": pd.Series([], dtype=object)})
-    match = np.sort(match_pdf["doc_id"].to_numpy(dtype=np.int64))
-    df_row = post_pdf["df_part"].to_numpy(dtype=np.int64)
-    abs_doc = _decode_doc_rows(pa.array(post_pdf["doc_ids"], type=pa.binary()), df_row)
-    hit = np.isin(abs_doc.view(np.int64), match).astype(np.int64)
-    row_starts = np.zeros(df_row.size, dtype=np.int64)
-    np.cumsum(df_row[:-1], out=row_starts[1:])
-    idx = np.flatnonzero(np.add.reduceat(hit, row_starts) > 0)
-    return pd.DataFrame({"term": post_pdf["term"].iloc[idx].to_numpy()})
+    if not post.num_rows or not match.num_rows:
+        return pa.table({"term": pa.array([], pa.string())})
+    return post.select(["term"]).take(_rows_hitting(post, _col(match, "doc_id")))
 
 
 def term_list_post(
@@ -153,8 +135,6 @@ def term_list_post(
     if index.tombstones is not None:
         m = m.join(index.tombstones.select("doc_id"), "doc_id", "left_anti")
 
-    import numpy as np
-
     spark = index.postings.sparkSession
     head = m.limit(broadcast_max_ids + 1).collect()
     if len(head) <= broadcast_max_ids:
@@ -178,7 +158,7 @@ def term_list_post(
     return (
         index.postings.groupBy("range_id")
         .cogroup(per_range.groupBy("range_id"))
-        .applyInPandas(_post_cogroup_terms, "term string")
+        .applyInArrow(_post_cogroup_terms, "term string")
         .distinct()
     )
 

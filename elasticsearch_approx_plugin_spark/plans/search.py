@@ -73,6 +73,7 @@ the 100 TB story of the underlying scorers carries through unchanged.
 
 from __future__ import annotations
 
+import math
 import re
 from typing import Any
 
@@ -121,6 +122,17 @@ def _spec_value(spec: Any, kind: str, key: str, options: set[str]) -> Any:
     if unknown:
         raise ValueError(f"{kind} query: unsupported option(s) {sorted(unknown)}")
     return spec[key]
+
+
+def _weight(body: dict[str, Any], key: str, default: float, hi: float = math.inf) -> float:
+    """A ``boost``/``tie_breaker``/``negative_boost`` value, parsed
+    strictly: finite and in [0, ``hi``] (ES bounds the last two to
+    [0, 1]). ``round6_oracle``'s half-up contract holds only for
+    scores >= 0, so a negative weight must not reach it."""
+    v = float(body.get(key, default))
+    if not (math.isfinite(v) and 0.0 <= v <= hi):
+        raise ValueError(f"{key} must be a finite number in [0, {hi:g}], got {v!r}")
+    return v
 
 
 def _rank(hits: DataFrame, k: int) -> DataFrame:
@@ -328,7 +340,7 @@ def _scored_hits(
         unknown = set(body) - {"boost"}
         if unknown:
             raise ValueError(f"match_all query: unsupported key(s) {sorted(unknown)}")
-        boost = round(float(body.get("boost", 1.0)), 6)
+        boost = round(_weight(body, "boost", 1.0), 6)
         return _rank(
             _visible_doc_ids(index).select(
                 F.lit(0).cast("long").alias("query_id"),
@@ -341,7 +353,7 @@ def _scored_hits(
     if kind == "term":
         fld, spec = _field_body(body, "term")
         val = str(_spec_value(spec, "term", "value", {"boost"}))
-        boost = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
+        boost = _weight(spec, "boost", 1.0) if isinstance(spec, dict) else 1.0
         if boost == 1.0:
             return score_queries(index, [(0, [val])], k, prune=prune)
         # boost rescales AFTER the 6-dp rounding the scorer applies, and
@@ -384,8 +396,8 @@ def _scored_hits(
         subs = body.get("queries")
         if not isinstance(subs, list) or not subs:
             raise ValueError("dis_max requires a non-empty queries list")
-        tie = float(body.get("tie_breaker", 0.0))
-        boost = float(body.get("boost", 1.0))
+        tie = _weight(body, "tie_breaker", 0.0, 1.0)
+        boost = _weight(body, "boost", 1.0)
         parts = [
             _scored_hits(index, sub, index.n_docs, tokens, docs, prune).select(
                 "doc_id", "score"
@@ -418,7 +430,7 @@ def _scored_hits(
             raise ValueError(f"boosting query: unsupported key(s) {sorted(unknown)}")
         if "positive" not in body or "negative" not in body:
             raise ValueError("boosting query requires positive and negative")
-        nb = float(body.get("negative_boost", 0.5))
+        nb = _weight(body, "negative_boost", 0.5, 1.0)
         pos = _scored_hits(
             index, body["positive"], index.n_docs, tokens, docs, prune
         )
@@ -516,7 +528,7 @@ def _scored_hits(
             raise ValueError("constant_score query requires a filter")
         if docs is None:
             raise ValueError("constant_score needs the docs DataFrame")
-        boost = round(float(body.get("boost", 1.0)), 6)
+        boost = round(_weight(body, "boost", 1.0), 6)
         return (
             docs.filter(lower_filter(body["filter"]))
             .select(

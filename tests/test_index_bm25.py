@@ -877,3 +877,194 @@ def test_msm_validation(index):
         bool_should_topk(index, [(0, ["hash"], 0)])
     with pytest.raises(ValueError):
         score_queries(index, QUERIES, K, minimum_should_match=0)
+
+
+# -- Spark-free scorer bodies: the applyInArrow functions called directly --
+
+_K1, _B, _AVGDL, _BITS = 1.2, 0.75, 40.0, 8
+_GROUP_SCHEMA = (
+    ("term", "string"), ("range_id", "int64"), ("df_part", "int64"),
+    ("cf_part", "int64"), ("max_tfnorm", "float64"), ("doc_ids", "binary"),
+    ("tfs", "binary"), ("dls", "binary"), ("query_id", "int64"), ("idf", "float64"),
+)
+
+
+def _tfnorm(tf, dl):
+    return (tf * (_K1 + 1.0)) / (tf + _K1 * (1.0 - _B + _B * dl / _AVGDL))
+
+
+def _posting_row(term, rid, docs, tfs, dls, max_tfnorm=None):
+    import numpy as np
+
+    from elasticsearch_approx_plugin_spark.functions.varint import (
+        delta_varint_encode,
+        varint_encode,
+    )
+
+    tfs, dls = np.asarray(tfs, dtype=np.uint64), np.asarray(dls, dtype=np.uint64)
+    if max_tfnorm is None:
+        max_tfnorm = float(_tfnorm(tfs.astype(float), dls.astype(float)).max())
+    return {
+        "term": term, "range_id": rid, "df_part": len(docs),
+        "cf_part": int(tfs.sum()), "max_tfnorm": max_tfnorm,
+        "doc_ids": delta_varint_encode(np.asarray(docs, dtype=np.uint64)),
+        "tfs": varint_encode(tfs), "dls": varint_encode(dls),
+    }
+
+
+def _group_table(rows):
+    import pyarrow as pa
+
+    schema = pa.schema([(n, pa.type_for_alias(t)) for n, t in _GROUP_SCHEMA])
+    return pa.Table.from_pylist(rows, schema=schema)
+
+
+def _random_batch(seed):
+    """A seeded query batch joined to its posting rows, in arbitrary
+    arrival order: Zipf row lengths, a small vocabulary so terms repeat
+    across queries, per-range tombstones and msm > 1 on some queries."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    vocab = [f"w{i:02d}" for i in range(25)]
+    postings = {}
+    for rid in range(4):
+        for t in vocab:
+            if rng.random() < 0.35:
+                continue
+            df = int(min(rng.zipf(1.4), 1 << _BITS))
+            docs = np.sort(rng.choice(1 << _BITS, df, replace=False)) + (rid << _BITS)
+            tfs = rng.zipf(2.0, df).clip(1, 40)
+            postings[(t, rid)] = _posting_row(t, rid, docs, tfs, rng.integers(3, 120, df))
+    idf = {t: float(rng.uniform(0.05, 6.0)) for t in vocab}
+    queries = {q: sorted(set(rng.choice(vocab, rng.integers(1, 5)).tolist())) for q in range(30)}
+    rows = [
+        {**postings[(t, rid)], "query_id": q, "idf": idf[t]}
+        for q, ts in queries.items() for t in ts for rid in range(4) if (t, rid) in postings
+    ]
+    rows = [rows[i] for i in rng.permutation(len(rows))]
+    tomb = {
+        rid: np.sort(rng.choice(1 << _BITS, 40, replace=False) + (rid << _BITS)).astype(np.int64)
+        for rid in range(4)
+    }
+    msm = {q: 2 for q in queries if q % 3 == 0}
+    return _group_table(rows), tomb, msm
+
+
+def _reference_scores(tbl, tomb, msm):
+    """(query, doc) → score the slow way: Python floats per posting,
+    summed in sorted-term order, rounded like the scorers."""
+    import numpy as np
+
+    from elasticsearch_approx_plugin_spark.functions.varint import (
+        delta_varint_decode,
+        varint_decode,
+    )
+
+    acc = {}
+    for r in sorted(tbl.to_pylist(), key=lambda r: (r["query_id"], r["term"])):
+        dead = set(tomb.get(r["range_id"], np.empty(0)).tolist())
+        for d, tf, dl in zip(
+            delta_varint_decode(r["doc_ids"]).tolist(),
+            varint_decode(r["tfs"]).tolist(),
+            varint_decode(r["dls"]).tolist(),
+        ):
+            if d not in dead:
+                s, n = acc.get((r["query_id"], d), (0.0, 0))
+                acc[(r["query_id"], d)] = (s + r["idf"] * _tfnorm(float(tf), float(dl)), n + 1)
+    return {
+        key: float(np.round(s, 6)) for key, (s, n) in acc.items() if n >= msm.get(key[0], 1)
+    }
+
+
+def _groups(tbl, key):
+    import numpy as np
+
+    col = tbl[key].to_numpy()
+    return [tbl.take(np.flatnonzero(col == g)) for g in np.unique(col)]
+
+
+def _global_topk(rows, k):
+    """query → [(doc, score)] top-k by (score desc, doc asc)."""
+    by_q = {}
+    for q, d, s in rows:
+        by_q.setdefault(q, []).append((d, s))
+    return {q: sorted(v, key=lambda x: (-x[1], x[0]))[:k] for q, v in by_q.items()}
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_scorer_bodies_equal_reference_and_each_other(seed):
+    """Exhaustive range-group body and WAND query-group body give ==
+    scores (not approx) for the same docs, both equal to a per-posting
+    reference — with tombstones, repeated terms and msm > 1."""
+    import types
+
+    from elasticsearch_approx_plugin_spark.operators.bm25 import (
+        _make_scorer,
+        _make_wand_scorer,
+    )
+
+    tbl, tomb, msm = _random_batch(seed)
+    tomb_b = types.SimpleNamespace(value=tomb)
+    k = 5
+
+    def exhaustive(m):
+        body = _make_scorer(_K1, _B, _AVGDL, k, tomb_b, m or None)
+        return [
+            r for g in _groups(tbl, "range_id") for r in zip(*body(g).to_pydict().values())
+        ]
+
+    for m in ({}, msm):
+        ref = _reference_scores(tbl, tomb, m)
+        out = exhaustive(m)
+        assert out and all(ref[(q, d)] == s for q, d, s in out)
+        assert _global_topk(out, k) == _global_topk(
+            [(q, d, s) for (q, d), s in ref.items()], k
+        )
+    plain = _global_topk(exhaustive({}), k)
+    wand = _make_wand_scorer(_K1, _B, _AVGDL, k, 1.0, tomb_b)
+    for g in _groups(tbl, "query_id"):
+        got = wand(g).to_pydict()
+        q = g["query_id"][0].as_py()
+        assert list(zip(got["doc_id"], got["score"])) == plain.get(q, [])
+
+
+def test_wand_never_decodes_a_skipped_range():
+    """A posting row with a corrupt ``tfs`` blob in a range whose bound
+    falls below τ: the WAND walk stops before it (no decode, no error);
+    the exhaustive body, which decodes every row, raises."""
+    from elasticsearch_approx_plugin_spark.operators.bm25 import (
+        _make_scorer,
+        _make_wand_scorer,
+    )
+
+    strong = _posting_row("hot", 0, [1, 2, 3, 4], [9, 8, 7, 6], [10, 10, 10, 10])
+    weak = _posting_row("hot", 1, [300, 301], [1, 1], [90, 90], max_tfnorm=0.01)
+    weak["tfs"] = weak["tfs"][:1]  # one varint short
+    tbl = _group_table(
+        [{**strong, "query_id": 7, "idf": 2.0}, {**weak, "query_id": 7, "idf": 2.0}]
+    )
+    got = _make_wand_scorer(_K1, _B, _AVGDL, 2)(tbl).to_pydict()
+    assert got["doc_id"] == [1, 2]
+    assert set(got["ranges_total"]) == {2} and set(got["ranges_scored"]) == {1}
+    with pytest.raises(ValueError):
+        _make_scorer(_K1, _B, _AVGDL, 2)(tbl.slice(1, 1))
+
+
+def test_accumulate_wide_doc_span():
+    """Doc ids spread so wide that the (query rank, doc) int64 sort key
+    would overflow take the two-key sort instead, with the same sums."""
+    import numpy as np
+
+    from elasticsearch_approx_plugin_spark.operators.bm25 import _accumulate
+
+    ids = np.array([1, 3, 1, 2], dtype=np.int64)
+    tfnorm, offs = np.array([0.5, 0.25, 1.0, 0.125]), np.array([0, 2, 4])
+    rows, qids, idf = np.array([0, 1, 0]), np.array([4, 4, 9]), np.array([1.0, 2.0, 3.0])
+    q, docs, scores, n = _accumulate(ids, tfnorm, offs, rows, qids, idf)
+    assert q.tolist() == [4, 4, 4, 9, 9] and docs.tolist() == [1, 2, 3, 1, 3]
+    assert scores.tolist() == [2.5, 0.25, 0.25, 1.5, 0.75] and n.tolist() == [2, 1, 1, 1, 1]
+    wide = _accumulate(ids << 61, tfnorm, offs, rows, qids, idf)
+    assert wide[1].tolist() == (docs << 61).tolist()
+    for got, want in zip((wide[0], wide[2], wide[3]), (q, scores, n)):
+        assert got.tolist() == want.tolist()

@@ -1,70 +1,16 @@
-"""Multimodal plumbing: schema, Arrow batch shape, deterministic fake
-features, frame sampling, and the decode stub contract."""
+"""Multimodal plumbing: opaque binary payloads through one Arrow pass."""
 
-import pytest
+import numpy as np
 
 from elasticsearch_approx_plugin_spark.operators.multimodal import (
-    decode_image,
-    extract_features,
-    sample_frames,
+    media_byte_stats,
     synth_media,
 )
 
 
-def test_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x00")
-
-
-def test_extract_features_shape_and_determinism(spark):
-    media = synth_media(spark, 20, "image")
-    a = {r["media_id"]: r["features"] for r in extract_features(media, dim=16).collect()}
-    assert len(a) == 20 and all(len(v) == 16 for v in a.values())
-    b = {
-        r["media_id"]: r["features"]
-        for r in extract_features(media.repartition(5), dim=16).collect()
-    }
-    assert a == b  # pure function of payload, not partitioning
-
-
-def test_extract_features_without_fake_decoder_raises(spark):
-    media = synth_media(spark, 2, "image")
-    with pytest.raises(Exception, match="NotImplementedError|not available"):
-        extract_features(media, dim=4, use_fake_decoder=False).collect()
-
-
-def test_sample_frames(spark):
-    media = synth_media(spark, 3, "video")
-    rows = sample_frames(media, every_ms=250).collect()
-    durations = {r["media_id"]: r["meta"]["duration_ms"] for r in media.collect()}
-    from collections import Counter
-
-    per = Counter(r["media_id"] for r in rows)
-    for mid, dur in durations.items():
-        assert per[mid] == dur // 250 + 1
-    assert all(r["frame_ts_ms"] % 250 == 0 for r in rows)
-
-
-def test_fake_decode_resize_stats(spark):
-    """decode→resize→stats plumbing: array contracts hold, stats match
-    a direct computation, and determinism holds across partitionings."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from elasticsearch_approx_plugin_spark.operators.multimodal import (
-        decode_image_fake,
-        media_byte_stats,
-        resize_fake,
-        synth_media,
-    )
-
-    px = decode_image_fake(b"0123456789", 8, 6)
-    assert px.shape == (6, 8, 3) and px.dtype == np.uint8
-    small = resize_fake(px, 4, 3)
-    assert small.shape == (3, 4, 3)
-    # nearest-neighbor: every output pixel exists in the input
-    assert set(small.reshape(-1).tolist()) <= set(px.reshape(-1).tolist())
-
+def test_media_byte_stats(spark):
+    """Per-payload stats match a direct computation, and determinism
+    holds across partitionings."""
     media = synth_media(spark, 40)
     got = {
         r["media_id"]: (r["n_bytes"], r["mean_millionths"])

@@ -202,6 +202,24 @@ def test_strictness(index, docs, tokens):
     ):
         with pytest.raises(ValueError):
             search_topk(index, {"query": query}, tokens=tokens)
+    # weights are finite and >= 0 (a negative one would reach
+    # round6_oracle, whose half-up contract holds only for values >= 0);
+    # tie_breaker and negative_boost stay in [0, 1], as in ES
+    term, other = {"term": {"text": "hash"}}, {"term": {"text": "join"}}
+    for query in (
+        {"match_all": {"boost": -1.0}},
+        {"match_all": {"boost": float("nan")}},
+        {"term": {"text": {"value": "hash", "boost": float("inf")}}},
+        {"term": {"text": {"value": "hash", "boost": -2.0}}},
+        {"dis_max": {"queries": [term], "tie_breaker": 1.5}},
+        {"dis_max": {"queries": [term], "tie_breaker": -0.1}},
+        {"dis_max": {"queries": [term], "boost": -0.5}},
+        {"boosting": {"positive": term, "negative": other, "negative_boost": -0.1}},
+        {"boosting": {"positive": term, "negative": other, "negative_boost": 2.0}},
+        {"constant_score": {"filter": {"range": {"doc_id": {"gte": 2}}}, "boost": -1.0}},
+    ):
+        with pytest.raises(ValueError, match="must be a finite number"):
+            search_topk(index, {"query": query}, tokens=tokens, docs=docs)
     phrase = {"match_phrase": {"text": {"query": "hash join", "slop": 0}}}
     assert _rows(search_topk(index, {"query": phrase}, tokens=tokens)) == _rows(
         search_topk(index, {"query": {"match_phrase": {"text": "hash join"}}}, tokens=tokens)

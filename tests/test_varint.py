@@ -37,33 +37,63 @@ def test_delta_roundtrip(values):
 
 
 def test_decode_doc_rows_roundtrip_property():
-    """Property: for ANY set of per-row sorted docID lists, the flat
-    concatenated-blob decode (_decode_doc_rows) returns exactly the
-    concatenation of the original absolute ids."""
+    """Property: for ANY set of per-row sorted docID lists with aligned
+    tf/dl values, the flat concatenated-blob decodes — _decode_doc_rows
+    and the shared posting-row kernel _decode_postings — return exactly
+    the concatenation of the original values, with each row's offsets;
+    a stream one varint short raises ValueError."""
     import numpy as np
     import pyarrow as pa
+    import pytest
     from hypothesis import given, settings, strategies as st
 
-    from elasticsearch_approx_plugin_spark.operators.postings import _decode_doc_rows
+    from elasticsearch_approx_plugin_spark.operators.postings import (
+        _decode_doc_rows,
+        _decode_postings,
+    )
     from elasticsearch_approx_plugin_spark.functions.varint import delta_varint_encode
+
+    doc_id = st.one_of(st.integers(0, 2**62), st.integers(2**63 - 2**16, 2**63 - 1))
+    value = st.one_of(st.integers(0, 2**16), st.integers(2**63 - 2**16, 2**64 - 1))
+    posting_row = st.dictionaries(doc_id, st.tuples(value, value), min_size=1, max_size=30)
 
     @settings(max_examples=200, deadline=None)
     @given(
-        st.lists(
-            st.lists(st.integers(0, 2**62), min_size=1, max_size=30).map(
-                lambda xs: sorted(set(xs))
-            ),
-            min_size=1,
-            max_size=12,
-        )
+        st.lists(posting_row.map(lambda r: sorted(r.items())), min_size=1, max_size=12),
+        st.sampled_from(["doc_ids", "tfs", "dls"]),
     )
-    def run(rows):
-        blobs = [delta_varint_encode(np.array(r, dtype=np.uint64)) for r in rows]
+    def run(rows, short):
+        ids = [np.array([d for d, _ in r], dtype=np.uint64) for r in rows]
+        tfs = [np.array([v[0] for _, v in r], dtype=np.uint64) for r in rows]
+        dls = [np.array([v[1] for _, v in r], dtype=np.uint64) for r in rows]
         counts = np.array([len(r) for r in rows], dtype=np.int64)
-        col = pa.array(blobs, type=pa.binary())
-        got = _decode_doc_rows(col, counts)
-        exp = np.concatenate([np.array(r, dtype=np.uint64) for r in rows])
-        np.testing.assert_array_equal(got, exp)
+        streams = {
+            "doc_ids": [delta_varint_encode(v) for v in ids],
+            "tfs": [varint_encode(v) for v in tfs],
+            "dls": [varint_encode(v) for v in dls],
+        }
+        tbl = pa.table(
+            {"df_part": counts, **{c: pa.array(b, pa.binary()) for c, b in streams.items()}}
+        )
+        exp = np.concatenate(ids)
+        np.testing.assert_array_equal(_decode_doc_rows(tbl["doc_ids"], counts), exp)
+        docs, tf, dl, offs = _decode_postings(tbl)
+        assert docs.dtype == np.int64
+        np.testing.assert_array_equal(docs, exp.astype(np.int64))
+        np.testing.assert_array_equal(tf, np.concatenate(tfs))
+        np.testing.assert_array_equal(dl, np.concatenate(dls))
+        np.testing.assert_array_equal(offs, np.r_[0, np.cumsum(counts)])
+        only_ids = _decode_postings(tbl.select(["df_part", "doc_ids"]))
+        assert only_ids[1] is None and only_ids[2] is None
+        # the last row's `short` stream loses its last varint
+        vals = {"doc_ids": ids, "tfs": tfs, "dls": dls}[short][-1][:-1]
+        enc = delta_varint_encode if short == "doc_ids" else varint_encode
+        cut = streams[short][:-1] + [enc(vals)]
+        broken = tbl.set_column(
+            tbl.schema.get_field_index(short), short, pa.array(cut, pa.binary())
+        )
+        with pytest.raises(ValueError):
+            _decode_postings(broken)
 
     run()
 
