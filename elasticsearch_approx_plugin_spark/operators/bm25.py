@@ -110,7 +110,9 @@ def _accumulate(ids, tfnorm, offs, rows, qids, idf):
     grp = np.empty(order.size, dtype=np.int64)
     grp[order] = np.cumsum(new) - 1
     n = int(new.sum())
-    scores = np.bincount(grp, weights=contrib, minlength=n)
+    # float64 even when empty (every doc tombstoned): bincount of no
+    # input returns int64 despite the weights
+    scores = np.bincount(grp, weights=contrib, minlength=n).astype(np.float64, copy=False)
     return qo[new], do[new], np.round(scores, SCORE_DECIMALS), np.bincount(grp, minlength=n)
 
 
@@ -233,7 +235,7 @@ def _make_wand_scorer(
     return score_group
 
 
-from ..session import n_shuffle_partitions as _n_shuffle  # noqa: E402
+from ..session import n_shuffle_partitions, task_slots  # noqa: E402
 
 
 def _tombstone_broadcast(index: InvertedIndex):
@@ -310,9 +312,14 @@ def score_queries(
     decoded. Results are identical to the exhaustive path (asserted in
     tests; τ compares with the score-rounding slack, so pruning only
     ever over-includes). Same shuffle volume as exhaustive, strictly
-    less decode; parallelism = queries × 1 task, so it is the BATCH
+    less decode; each query is walked by one task, so it is the BATCH
     serving shape (the exhaustive path parallelizes a single query
     across ranges and stays the low-latency choice on small indexes).
+
+    Each scorer stage is ``min(spark.sql.shuffle.partitions,
+    task_slots)`` partitions wide (``session.task_slots``): one wave of
+    Python tasks, however many queries or ranges it scores; empty
+    partitions start no task.
 
     Straggler guard: a query whose candidate volume (Σ df of its
     terms, known from the already-collected dictionary rows — zero
@@ -373,7 +380,7 @@ def score_queries(
     idf = {t: _idf(index.n_docs, cache[t][0]) for t in terms if cache[t][0] > 0}
     qt = small_df(
         spark,
-        [(qid, t, idf[t]) for qid, ts in queries for t in set(ts) if t in idf],
+        [(qid, t, idf[t]) for qid, ts in queries for t in dict.fromkeys(ts) if t in idf],
         "query_id long, term string, idf double",
     )
     if has_buckets:
@@ -391,6 +398,15 @@ def score_queries(
     avgdl = index.avgdl or 1.0
     scorer = _make_scorer(index.k1, index.b, avgdl, k, tomb_b, msm or None)
     out_schema = "query_id long, doc_id long, score double"
+    # every scorer stage runs in ONE wave: a Python task costs its
+    # worker 0.23-0.28 CPU-s of fixed overhead (measured on local[4])
+    # against milliseconds of scoring, so more tasks than slots only
+    # add that cost. The width stays explicit (REPARTITION_BY_NUM): AQE's
+    # byte-based coalescing would fold these small-in-bytes,
+    # decode-heavy exchanges onto 1-3 tasks (measured on local[32]: a
+    # 50-query WAND stage ran 2.0 s on 3 AQE-coalesced tasks vs ~0.5 s
+    # at 32).
+    width = min(n_shuffle_partitions(spark), task_slots(spark))
 
     if prune:
         heavy_qids = {
@@ -403,7 +419,7 @@ def score_queries(
         wand_in = matched
         if heavy_qids:
             wand_in = matched.filter(~F.col("query_id").isin(sorted(heavy_qids)))
-        local = wand_in.repartition(_n_shuffle(spark), "query_id").groupBy(
+        local = wand_in.repartition(width, "query_id").groupBy(
             "query_id"
         ).applyInArrow(
             wand, out_schema + ", ranges_total long, ranges_scored long"
@@ -426,13 +442,13 @@ def score_queries(
         if heavy_qids:
             heavy = (
                 matched.filter(F.col("query_id").isin(sorted(heavy_qids)))
-                .repartition(_n_shuffle(spark), "range_id")
+                .repartition(width, "range_id")
                 .groupBy("range_id")
                 .applyInArrow(scorer, out_schema)
             )
             local = local.unionByName(heavy)
     else:
-        local = matched.repartition(_n_shuffle(spark), "range_id").groupBy(
+        local = matched.repartition(width, "range_id").groupBy(
             "range_id"
         ).applyInArrow(scorer, out_schema)
 

@@ -186,9 +186,11 @@ def sketch_agg(
 
     if not group_cols:
         return _global(partials)
-    # explicit width (REPARTITION_BY_NUM): the state merge is a Python
-    # pass over per-(partition x group) states — AQE's byte-based
-    # coalescing would fold it onto 1-2 workers (session.n_shuffle_partitions)
+    # hash by the group columns with no explicit width
+    # (REPARTITION_BY_COL): AQE coalesces the merge's partitions by
+    # bytes, so a small facet's Python state merge runs on few tasks.
+    # A fixed width (session.n_shuffle_partitions) would start up to 32
+    # Python tasks, each with a fixed worker cost, for a handful of groups.
     grouped = partials.repartition(*group_cols).mapInPandas(
         _merge_states(group_cols), final_schema
     )

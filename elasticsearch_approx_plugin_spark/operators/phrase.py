@@ -106,7 +106,7 @@ def _candidates(
     # the all-terms-present check is a HAVING on the candidate groupBy
     # instead of a second broadcast join — one fewer stage per call.
     qt = small_df(spark, 
-        [(qid, t, len(set(p))) for qid, p in phrases for t in set(p)],
+        [(qid, t, len(set(p))) for qid, p in phrases for t in dict.fromkeys(p)],
         "query_id long, term string, n_terms int",
     )
     cand = (
@@ -240,7 +240,7 @@ def phrase_prefix_match(
     qt_rows = []
     for qid, p in queries:
         complete = p[:-1]
-        for t in set(complete):
+        for t in dict.fromkeys(complete):
             qt_rows.append((qid, t, 1, 0, len(set(complete))))
         for t in expanded[qid]:
             qt_rows.append((qid, t, 0, 1, len(set(complete))))

@@ -41,10 +41,7 @@ def get_spark(
     # scaling efficiency 0.56 → 0.88 on the shuffle+encode phase).
     # On a real cluster, size default.parallelism ≈ 2-4× total cores
     # for the same reason.
-    m = re.match(r"local\[(\d+|\*)\]", master)
-    local_cores = (
-        (os.cpu_count() or 8) if m and m.group(1) == "*" else int(m.group(1)) if m else None
-    )
+    local_cores = _local_slots(master)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -127,18 +124,41 @@ def prewarm_python_workers(spark: SparkSession, n: int | None = None) -> None:
         pass
 
 
+def _local_slots(master: str) -> int | None:
+    """Task slots of a local master: N for ``local[N]``, the machine's
+    cores for ``local[*]``, 1 for ``local``; None for any other
+    master."""
+    m = re.fullmatch(r"local(?:\[(\d+|\*)\])?", master)
+    if not m:
+        return None
+    if m.group(1) is None:
+        return 1
+    return (os.cpu_count() or 8) if m.group(1) == "*" else int(m.group(1))
+
+
+def task_slots(spark: SparkSession) -> int:
+    """How many tasks the session runs at once: the local master's
+    thread count, else ``spark.default.parallelism`` (on a cluster,
+    the executors' total cores unless set otherwise). Locally
+    ``default.parallelism`` cannot answer this, because
+    :func:`get_spark` floors it at 4 tasks per core."""
+    sc = spark.sparkContext
+    return _local_slots(sc.master) or sc.defaultParallelism
+
+
 def n_shuffle_partitions(spark: SparkSession) -> int:
     """The session's configured shuffle width (cluster-parameterized;
-    local default 32).  CPU-dense Python stages (posting encode/merge,
-    batch scorers) repartition to it EXPLICITLY (``REPARTITION_BY_NUM``)
-    because AQE's byte-based partition coalescing mis-sizes them: their
-    input exchanges are small in bytes but each row costs a varint
-    decode / numpy pass, and letting AQE fold them to 1-3 tasks
-    serializes the whole batch on one Python worker (measured on
-    local[32]: the 50-query WAND stage ran 2.0 s on 3 AQE-coalesced
-    tasks vs ~0.5 s at the configured width; the index-build encode
-    stage 1.6 s on 2 tasks).  At cluster scale the same conf value is
-    what sizes every other exchange, so this stays scale-adaptive."""
+    :func:`get_spark` defaults it to 32 whatever the core count).
+    CPU-dense Python stages (posting encode, merge and compaction)
+    repartition to it EXPLICITLY (``REPARTITION_BY_NUM``) because AQE's
+    byte-based partition coalescing mis-sizes them: their input
+    exchanges are small in bytes but each row costs a varint decode /
+    numpy pass, and letting AQE fold them to 1-3 tasks serializes the
+    whole stage on one Python worker (measured on local[32]: the
+    index-build encode stage ran 1.6 s on 2 tasks).  At cluster scale
+    the same conf value is what sizes every other exchange, so this
+    stays scale-adaptive. The BM25 scorers cap it further at
+    :func:`task_slots` (one wave; see ``bm25.score_queries``)."""
     try:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:

@@ -879,6 +879,93 @@ def test_msm_validation(index):
         score_queries(index, QUERIES, K, minimum_should_match=0)
 
 
+def test_task_slots_follow_the_master(spark):
+    """task_slots reads the local master's threads, not
+    default.parallelism (floored by get_spark at 4 tasks per core)."""
+    import os
+
+    from elasticsearch_approx_plugin_spark.session import _local_slots, task_slots
+
+    assert task_slots(spark) == 4 < spark.sparkContext.defaultParallelism
+    masters = ("local", "local[3]", "local[*]", "spark://host:7077")
+    assert [_local_slots(m) for m in masters] == [1, 3, os.cpu_count(), None]
+
+
+def test_scorer_width_does_not_change_results(index):
+    """Scorer stages are min(shuffle partitions, task slots) wide:
+    shuffle partitions 1, 3 and 8 (widths 1, 3 and 4 on local[4]) give
+    the same rows on the exhaustive and the WAND path."""
+    spark = index.postings.sparkSession
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    runs = []
+    try:
+        for n in ("1", "3", "8"):
+            spark.conf.set(conf, n)
+            for prune in (False, True):
+                df = score_queries(index, QUERIES, K, prune=prune)
+                runs.append(sorted(tuple(r) for r in df.collect()))
+    finally:
+        spark.conf.set(conf, old)
+    assert runs[0] and all(r == runs[0] for r in runs)
+
+
+def test_query_table_follows_term_order(index, monkeypatch):
+    """The broadcast query table lists each query's distinct terms in
+    first-occurrence order, so its literal (and the plan text) does not
+    depend on the process's string-hash seed."""
+    from elasticsearch_approx_plugin_spark.operators import bm25
+
+    terms = [r["term"] for r in index.dictionary.orderBy("term").limit(6).collect()]
+    query = terms[::-1] + terms[2:4] + terms[:1]
+    seen = []
+
+    class Captured(Exception):
+        pass
+
+    def capture(spark, rows, schema):
+        seen.append(rows)
+        raise Captured
+
+    monkeypatch.setattr(bm25, "small_df", capture)
+    with pytest.raises(Captured):
+        bm25.score_queries(index, [(0, query), (1, terms[1:2])], K)
+    assert [(q, t) for q, t, _ in seen[0]] == [(0, t) for t in terms[::-1]] + [
+        (1, terms[1])
+    ]
+
+
+def test_all_tombstoned_term_scores_nothing(spark, tmp_path):
+    """A term whose every document is deleted: both scorers return no
+    rows for it (no int64 ``score`` from an empty sum failing the
+    stage), the other terms of the batch still score, and warm_index
+    probing that term does not raise."""
+    import dataclasses
+
+    from elasticsearch_approx_plugin_spark.operators.bm25 import warm_index
+    from elasticsearch_approx_plugin_spark.operators.postings import delete_from_index
+
+    rows = [(1, "alpha beta"), (2, "beta gamma"), (3, "gamma solitary")]
+    toks = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", tokenize_ws("text").alias("tokens")
+    )
+    path = str(tmp_path / "idx")
+    write_index(build_index(toks, range_bits=6), path, n_buckets=2)
+    delete_from_index(spark, path, [3])
+    idx = read_index(spark, path)
+    for prune in (False, True):
+        assert score_queries(idx, [(0, ["solitary"])], K, prune=prune).count() == 0
+        got = score_queries(idx, [(0, ["solitary"]), (1, ["gamma"])], K, prune=prune)
+        assert [(r["query_id"], r["doc_id"]) for r in got.collect()] == [(1, 2)]
+    probe = dataclasses.replace(
+        idx,
+        dictionary=idx.dictionary.filter(F.col("term") == "solitary"),
+        term_cache={},
+        tomb_cache=[],
+    )
+    warm_index(probe)
+
+
 # -- Spark-free scorer bodies: the applyInArrow functions called directly --
 
 _K1, _B, _AVGDL, _BITS = 1.2, 0.75, 40.0, 8
@@ -1068,3 +1155,28 @@ def test_accumulate_wide_doc_span():
     assert wide[1].tolist() == (docs << 61).tolist()
     for got, want in zip((wide[0], wide[2], wide[3]), (q, scores, n)):
         assert got.tolist() == want.tolist()
+
+
+def test_scorer_bodies_all_tombstoned_row():
+    """A posting row whose only doc is tombstoned: both bodies return
+    no rows and a float64 ``score`` column."""
+    import types
+
+    import numpy as np
+    import pyarrow as pa
+
+    from elasticsearch_approx_plugin_spark.operators.bm25 import (
+        _make_scorer,
+        _make_wand_scorer,
+    )
+
+    row = _posting_row("gone", 0, [5], [2], [10])
+    tbl = _group_table([{**row, "query_id": 3, "idf": 1.5}])
+    tomb_b = types.SimpleNamespace(value={0: np.array([5], dtype=np.int64)})
+    for body in (
+        _make_scorer(_K1, _B, _AVGDL, 2, tomb_b),
+        _make_wand_scorer(_K1, _B, _AVGDL, 2, 1.0, tomb_b),
+    ):
+        out = body(tbl)
+        assert out.num_rows == 0
+        assert out.schema.field("score").type == pa.float64()

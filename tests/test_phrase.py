@@ -228,3 +228,29 @@ def test_phrase_prefix_partitioning_invariant(spark, index, corpus):
         map(tuple, phrase_prefix_match(index, corpus.repartition(7), qs).collect())
     )
     assert a == b and a
+
+
+def test_query_tables_follow_term_order(index, corpus, monkeypatch):
+    """The phrase and phrase-prefix query tables list each phrase's
+    distinct terms in first-occurrence order, so their literals (and
+    the plan text) do not depend on the process's string-hash seed."""
+    from elasticsearch_approx_plugin_spark.operators import phrase
+
+    seen = []
+
+    class Captured(Exception):
+        pass
+
+    def capture(spark, rows, schema):
+        seen.append(rows)
+        raise Captured
+
+    monkeypatch.setattr(phrase, "small_df", capture)
+    words = ["table", "quick", "table", "brown", "fox", "quick", "the"]
+    with pytest.raises(Captured):
+        phrase_match(index, corpus, [(0, words)])
+    assert [r[1] for r in seen[0]] == ["table", "quick", "brown", "fox", "the"]
+    with pytest.raises(Captured):
+        phrase.phrase_prefix_match(index, corpus, [(0, words + ["qu"])])
+    complete = [r[1] for r in seen[1] if r[2] == 1]
+    assert complete == ["table", "quick", "brown", "fox", "the"]

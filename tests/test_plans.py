@@ -4,6 +4,7 @@ silently regress them. (Scan-level checks — PushedFilters, partition
 pruning, ReadSchema — live next to their operators' tests.)"""
 
 import importlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 from elasticsearch_approx_plugin_spark.functions.tokenize import tokenize_ws
 from elasticsearch_approx_plugin_spark.operators import prefix
 from elasticsearch_approx_plugin_spark.operators.ann import cosine_topk
+from elasticsearch_approx_plugin_spark.operators.bm25 import score_queries
 from elasticsearch_approx_plugin_spark.operators.dedup import dedup_exact, simhash
 from elasticsearch_approx_plugin_spark.operators.postings import (
     build_index,
@@ -224,3 +226,15 @@ def test_batch2_hygiene_ops_zero_shuffle(spark, sf_dir):
     assert plan.count("Exchange") <= 1
     assert "REPARTITION_BY_NUM" in plan or "Exchange" not in plan
     assert "InPandas" not in plan and "Python" not in plan
+
+
+def test_bm25_scorer_exchange_is_one_wave(persisted_index):
+    """Each scorer stage is as wide as the session's task slots when
+    the shuffle width is larger (local[4] with 8 shuffle partitions →
+    4), and stays an explicit REPARTITION_BY_NUM so AQE cannot fold
+    it: by range_id for the exhaustive scorer, by query_id for WAND."""
+    qs = [(0, ["hash", "join"]), (1, ["table"])]
+    for prune, key in ((False, "range_id"), (True, "query_id")):
+        plan = re.sub(r"#\d+L?", "", _simple(score_queries(persisted_index, qs, 10, prune=prune)))
+        scorer = [ln for ln in plan.splitlines() if "REPARTITION_BY_NUM" in ln]
+        assert len(scorer) == 1 and f"Exchange hashpartitioning({key}, 4)" in scorer[0]
