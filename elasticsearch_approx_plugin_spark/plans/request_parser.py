@@ -19,6 +19,9 @@ commented out in the reference parser.
 
 from __future__ import annotations
 
+import dataclasses
+import functools
+import operator
 from typing import Any
 
 from pyspark.sql import Column
@@ -26,75 +29,131 @@ from pyspark.sql import functions as F
 
 from .facet_query import CoreFacetQuery, DateFacetQuery, TermListQuery
 
+
+def _strict_keys(
+    body: Any,
+    what: str,
+    allowed: Any = (),
+    required: tuple[str, ...] = (),
+    noun: str = "key",
+) -> dict[str, Any]:
+    """The parsers' one strictness rule: ``body`` is an object whose
+    keys all appear in ``allowed`` or ``required``, and it carries every
+    ``required`` key — nothing silently drops. An ``allowed`` dict maps
+    each accepted spelling to its canonical name (the reference's
+    snake_case/camelCase aliases); the result is ``body`` keyed by
+    canonical names."""
+    if not isinstance(body, dict):
+        raise ValueError(f"{what} must be an object, got {body!r}")
+    unknown = set(body) - set(allowed) - set(required)
+    if unknown:
+        raise ValueError(f"{what}: unsupported {noun}(s) {sorted(unknown)}")
+    names = allowed if isinstance(allowed, dict) else {}
+    out = {names.get(k, k): v for k, v in body.items()}
+    missing = [k for k in required if k not in out]
+    if missing:
+        raise ValueError(f"{what} requires a {' and a '.join(missing)}")
+    return out
+
+
+def _one_key(body: Any, what: str) -> tuple[str, Any]:
+    """``{key: value}`` → ``(key, value)``; any other shape raises."""
+    if not isinstance(body, dict) or len(body) != 1:
+        raise ValueError(f"{what} must have exactly one key, got {body!r}")
+    ((key, value),) = body.items()
+    return key, value
+
+
+def _same(*names: str) -> dict[str, str]:
+    return {n: n for n in names}
+
+
+# spelling → parameter: the reference's snake_case and camelCase names
+_KEY_FIELD = {"field": "key_field", "key_field": "key_field", "keyField": "key_field"}
+_VALUE_FIELD = {"value_field": "value_field", "valueField": "value_field"}
 _DATE_ALIASES = {
-    "field": "key_field",
-    "key_field": "key_field",
-    "keyField": "key_field",
-    "value_field": "value_field",
-    "valueField": "value_field",
-    "distinct_field": "distinct_field",
+    **_KEY_FIELD,
+    **_VALUE_FIELD,
+    **_same(
+        "interval", "factor", "distinct_field", "slice_field", "pre_zone", "post_zone",
+        "pre_offset", "post_offset", "pre_zone_adjust_large_interval", "exact_threshold",
+    ),
     "distinctField": "distinct_field",
-    "slice_field": "slice_field",
     "sliceField": "slice_field",
-    "interval": "interval",
     "time_zone": "pre_zone",
     "timeZone": "pre_zone",
-    "pre_zone": "pre_zone",
     "preZone": "pre_zone",
-    "post_zone": "post_zone",
     "postZone": "post_zone",
-    "pre_offset": "pre_offset",
     "preOffset": "pre_offset",
-    "post_offset": "post_offset",
     "postOffset": "post_offset",
-    "pre_zone_adjust_large_interval": "pre_zone_adjust_large_interval",
     "preZoneAdjustLargeInterval": "pre_zone_adjust_large_interval",
-    "exact_threshold": "exact_threshold",
     "exactThreshold": "exact_threshold",
 }
+_TERM_LIST_ALIASES = {
+    **_KEY_FIELD, "max_per_shard": "max_per_shard", "maxPerShard": "max_per_shard",
+    "sample": "sample",
+}
+
+
+def _ranges(ranges: list[Any]) -> list[tuple[float | None, float | None]]:
+    out = []
+    for r in ranges:
+        r = _strict_keys(r, "range facet range", ("from", "to"))
+        out.append(tuple(float(r[b]) if b in r else None for b in ("from", "to")))
+    return out
+
+
+# ES 0.90 built-in facet kind → (spelling → parameter, required
+# parameters, parameter → the type it lowers to)
+_CORE_FACETS: dict[str, tuple[dict[str, str], tuple[str, ...], dict[str, Any]]] = {
+    "terms": (_same("field", "size", "order", "exclude"), ("field",),
+              {"size": int, "exclude": tuple}),
+    "statistical": (_same("field"), ("field",), {}),
+    "histogram": ({**_KEY_FIELD, **_VALUE_FIELD, "interval": "interval"},
+                  ("key_field", "interval"), {"interval": float}),
+    "range": ({**_same("field", "ranges"), "key_field": "field", "keyField": "field",
+               **_VALUE_FIELD}, ("field", "ranges"), {"ranges": _ranges}),
+    "terms_stats": ({**_KEY_FIELD, **_VALUE_FIELD, **_same("size", "order", "all_terms"),
+                     "allTerms": "all_terms"},
+                    ("key_field", "value_field"), {"size": int, "all_terms": bool}),
+}
+_CORE_FACET_KINDS = (*_CORE_FACETS, "filter", "query")
+# the keys a ``facets`` entry may carry next to its one facet body
+_FACET_LEVEL = {
+    **_same("date_facet", "term_list", *_CORE_FACET_KINDS, "mode", "nested", "global",
+            "facet_filter"),
+    "facetFilter": "facet_filter",
+}
+
+
+def _lower(body: Any, what: str, names: dict[str, str], required: tuple[str, ...],
+           casts: dict[str, Any]) -> dict[str, Any]:
+    """A facet body → its parameters: strict keys through the alias
+    table, then each parameter cast to its type."""
+    params = _strict_keys(body, what, names, required)
+    return {k: casts[k](v) if k in casts else v for k, v in params.items()}
 
 
 def parse_date_facet(clause: dict[str, Any]) -> DateFacetQuery:
     """``{"date_facet": {...}}`` body → :class:`DateFacetQuery`."""
-    kwargs: dict[str, Any] = {}
-    for k, v in clause.items():
-        if k == "factor":
-            kwargs["factor"] = float(v)
-            continue
-        if k in ("value_script", "valueScript", "lang"):
-            raise ValueError(f"{k} is not supported (reference parser comments it out)")
-        field = _DATE_ALIASES.get(k)
-        if field is None:
-            raise ValueError(f"unknown date_facet field {k!r}")
-        if field in ("pre_zone", "post_zone") and isinstance(v, int):
+    scripts = {"value_script", "valueScript", "lang"} & set(clause or ())
+    if scripts:
+        raise ValueError(f"{sorted(scripts)} not supported (reference parser comments it out)")
+    kwargs = _lower(clause, "date_facet", _DATE_ALIASES, ("key_field", "interval"),
+                    {"factor": float})
+    for zone in ("pre_zone", "post_zone"):
+        v = kwargs.get(zone)
+        if isinstance(v, int):
             # DateFacetParser.parseZone accepts whole-hour numbers
             # (DateTimeZone.forOffsetHours) — normalize to ±HH:00
-            v = f"{'+' if v >= 0 else '-'}{abs(v):02d}:00"
-        kwargs[field] = v
-    if "key_field" not in kwargs or "interval" not in kwargs:
-        raise ValueError("date_facet requires key_field and interval")
+            kwargs[zone] = f"{'+' if v >= 0 else '-'}{abs(v):02d}:00"
     return DateFacetQuery(**kwargs)
 
 
 def parse_term_list(clause: dict[str, Any], mode: str = "collector") -> TermListQuery:
-    kwargs: dict[str, Any] = {"mode": mode}
-    for k, v in clause.items():
-        if k in ("field", "key_field", "keyField"):
-            kwargs["key_field"] = v
-        elif k in ("max_per_shard", "maxPerShard"):
-            kwargs["max_per_shard"] = int(v)
-        elif k == "sample":
-            kwargs["sample"] = float(v)
-        else:
-            raise ValueError(f"unknown term_list field {k!r}")
-    if "key_field" not in kwargs:
-        raise ValueError("term_list requires key_field")
-    return TermListQuery(**kwargs)
-
-
-_CORE_FACET_KINDS = (
-    "terms", "statistical", "histogram", "range", "terms_stats", "filter", "query",
-)
+    params = _lower(clause, "term_list", _TERM_LIST_ALIASES, ("key_field",),
+                    {"max_per_shard": int, "sample": float})
+    return TermListQuery(mode=mode, **params)
 
 
 def parse_core_facet(kind: str, body: dict[str, Any]) -> CoreFacetQuery:
@@ -103,93 +162,18 @@ def parse_core_facet(kind: str, body: dict[str, Any]) -> CoreFacetQuery:
     Strict like the plugin parsers: every supported key is lowered,
     every unsupported key (scripts, regex includes, time_interval,
     ...) raises — nothing silently drops."""
-    params: dict[str, Any] = {}
-    if kind == "terms":
-        for k, v in body.items():
-            if k == "field":
-                params["field"] = v
-            elif k == "size":
-                params["size"] = int(v)
-            elif k == "order":
-                params["order"] = v
-            elif k == "exclude":
-                params["exclude"] = tuple(v)
-            else:
-                raise ValueError(f"terms facet: unsupported key {k!r}")
-        if "field" not in params:
-            raise ValueError("terms facet requires field")
-    elif kind == "statistical":
-        for k, v in body.items():
-            if k == "field":
-                params["field"] = v
-            else:
-                raise ValueError(f"statistical facet: unsupported key {k!r}")
-        if "field" not in params:
-            raise ValueError("statistical facet requires field")
-    elif kind == "histogram":
-        for k, v in body.items():
-            if k in ("field", "key_field", "keyField"):
-                params["key_field"] = v
-            elif k in ("value_field", "valueField"):
-                params["value_field"] = v
-            elif k == "interval":
-                params["interval"] = float(v)
-            else:
-                raise ValueError(f"histogram facet: unsupported key {k!r}")
-        if "key_field" not in params or "interval" not in params:
-            raise ValueError("histogram facet requires field and interval")
-    elif kind == "range":
-        for k, v in body.items():
-            if k in ("field", "key_field", "keyField"):
-                params["field"] = v
-            elif k in ("value_field", "valueField"):
-                params["value_field"] = v
-            elif k == "ranges":
-                rs = []
-                for r in v:
-                    unknown = set(r) - {"from", "to"}
-                    if unknown:
-                        raise ValueError(
-                            f"range facet: unsupported range key(s) {sorted(unknown)}"
-                        )
-                    rs.append(
-                        (
-                            float(r["from"]) if "from" in r else None,
-                            float(r["to"]) if "to" in r else None,
-                        )
-                    )
-                params["ranges"] = rs
-            else:
-                raise ValueError(f"range facet: unsupported key {k!r}")
-        if "field" not in params or "ranges" not in params:
-            raise ValueError("range facet requires field and ranges")
-    elif kind == "terms_stats":
-        all_terms = False
-        for k, v in body.items():
-            if k in ("key_field", "keyField"):
-                params["key_field"] = v
-            elif k in ("value_field", "valueField"):
-                params["value_field"] = v
-            elif k == "size":
-                params["size"] = int(v)
-            elif k in ("all_terms", "allTerms"):
-                all_terms = bool(v)
-            elif k == "order":
-                params["order"] = v
-            else:
-                raise ValueError(f"terms_stats facet: unsupported key {k!r}")
-        if all_terms:
-            params["size"] = 0  # ES all_terms overrides size
-        if "key_field" not in params or "value_field" not in params:
-            raise ValueError("terms_stats facet requires key_field and value_field")
-    elif kind == "filter":
+    if kind == "filter":
         # the facet body IS a filter DSL clause (ES filter facet)
-        params["predicate"] = lower_filter(body)
+        params = {"predicate": lower_filter(body)}
     elif kind == "query":
         # the facet body IS a query clause; filter-context shapes lower,
         # match_all counts everything (lower_query returns None there)
         pred = lower_query(body)
-        params["predicate"] = F.lit(True) if pred is None else pred
+        params = {"predicate": F.lit(True) if pred is None else pred}
+    elif kind in _CORE_FACETS:
+        params = _lower(body, f"{kind} facet", *_CORE_FACETS[kind])
+        if params.pop("all_terms", False):
+            params["size"] = 0  # ES all_terms overrides size
     else:
         raise ValueError(f"unknown core facet kind {kind!r}")
     return CoreFacetQuery(kind=kind, params=params)
@@ -212,13 +196,11 @@ def lower_filter(clause: dict[str, Any]) -> Column:
     inner filter didn't), hence the ``coalesce(..., False)`` before
     negation/disjunction.
     """
-    if len(clause) != 1:
-        raise ValueError(f"filter clause must have exactly one key, got {sorted(clause)}")
-    (kind, body), = clause.items()
+    kind, body = _one_key(clause, "filter clause")
     if kind == "match_all":
         return F.lit(True)
     if kind in ("range", "numeric_range"):
-        (fld, cond), = body.items()
+        fld, cond = _one_key(body, f"{kind} filter")
         ops = {
             "from": lambda c, v: c >= v if cond.get("include_lower", True) else c > v,
             "to": lambda c, v: c <= v if cond.get("include_upper", True) else c < v,
@@ -227,6 +209,7 @@ def lower_filter(clause: dict[str, Any]) -> Column:
             "lte": lambda c, v: c <= v,
             "lt": lambda c, v: c < v,
         }
+        _strict_keys(cond, f"range filter on {fld!r}", (*ops, "include_lower", "include_upper"))
         # a JSON-null bound is how ES builders serialize an UNSET bound
         # (RangeFilterBuilder leaves from/to null until set) — open on
         # that side, exactly like omitting the key
@@ -242,47 +225,32 @@ def lower_filter(clause: dict[str, Any]) -> Column:
             )
         if not bounds:
             raise ValueError(f"range filter on {fld!r} has no bounds: {cond}")
-        unknown = set(cond) - set(ops) - {"include_lower", "include_upper"}
-        if unknown:
-            raise ValueError(f"range filter on {fld!r}: unsupported option(s) {sorted(unknown)}")
         pred = F.lit(True)
         for k, v in bounds.items():
             pred = pred & ops[k](F.col(fld), F.lit(v))
         return pred
     if kind == "term":
-        (fld, val), = body.items()
+        fld, val = _one_key(body, "term filter")
         return F.col(fld) == F.lit(val)
-    if kind == "exists":
-        unknown = set(body) - {"field"}
-        if unknown:
-            raise ValueError(f"exists filter: unsupported key(s) {sorted(unknown)}")
-        return F.col(body["field"]).isNotNull()
-    if kind == "missing":
+    if kind in ("exists", "missing"):
         # ES 0.90 MissingFilter (existence=true, null_value=false
-        # defaults): matches docs where the field is absent/null
-        unknown = set(body) - {"field"}
-        if unknown:
-            raise ValueError(f"missing filter: unsupported key(s) {sorted(unknown)}")
-        return F.col(body["field"]).isNull()
+        # defaults) is exists' twin: docs whose field is absent/null
+        col = F.col(_strict_keys(body, f"{kind} filter", (), ("field",))["field"])
+        return col.isNotNull() if kind == "exists" else col.isNull()
     if kind == "ids":
         # ES IdsFilter; the _type list is 0.90 noise with one doc type
-        unknown = set(body) - {"values", "type"}
-        if unknown:
-            raise ValueError(f"ids filter: unsupported key(s) {sorted(unknown)}")
-        values = body["values"]
+        values = _strict_keys(body, "ids filter", ("type",), ("values",))["values"]
         if not isinstance(values, list) or not values:
             raise ValueError("ids filter requires a non-empty values list")
         return F.col("doc_id").isin(values)
     if kind == "prefix":
-        (fld, val), = body.items()
+        fld, val = _one_key(body, "prefix filter")
         return F.col(fld).startswith(str(val))
     if kind == "bool":
         def aslist(x):
             return x if isinstance(x, list) else [x]
 
-        unknown = set(body) - {"must", "must_not", "should"}
-        if unknown:
-            raise ValueError(f"bool filter: unsupported key(s) {sorted(unknown)}")
+        _strict_keys(body, "bool filter", ("must", "must_not", "should"))
         pred = F.lit(True)
         for sub in aslist(body.get("must", [])):
             pred = pred & lower_filter(sub)
@@ -331,15 +299,11 @@ def lower_query(clause: dict[str, Any]) -> Column | None:
     Scored queries with no filter equivalent (``match``,
     ``query_string``, ...) raise so nothing is silently ignored.
     """
-    if len(clause) != 1:
-        raise ValueError(f"query clause must have exactly one key, got {sorted(clause)}")
-    (kind, body), = clause.items()
+    kind, body = _one_key(clause, "query clause")
     if kind == "match_all":
         return None
     if kind == "filtered":
-        unknown = set(body) - {"query", "filter"}
-        if unknown:
-            raise ValueError(f"filtered query: unsupported key(s) {sorted(unknown)}")
+        body = _strict_keys(body, "filtered query", ("query",), ("filter",))
         inner = body.get("query", {"match_all": {}})
         if set(inner) != {"match_all"}:
             raise ValueError(
@@ -348,12 +312,10 @@ def lower_query(clause: dict[str, Any]) -> Column | None:
             )
         return lower_filter(body["filter"])
     if kind == "constant_score":
-        unknown = set(body) - {"filter", "boost"}
-        if unknown:
-            raise ValueError(f"constant_score query: unsupported key(s) {sorted(unknown)}")
-        if "filter" not in body:
-            raise ValueError("constant_score query requires a filter (query form is scored)")
-        return lower_filter(body["filter"])
+        # the query form is scored; only the filter form lowers
+        return lower_filter(
+            _strict_keys(body, "constant_score query", ("boost",), ("filter",))["filter"]
+        )
     if kind == "bool":
         has_must = bool(body.get("must")) or bool(body.get("must_not"))
         if has_must and body.get("should"):
@@ -392,7 +354,7 @@ def parse_request(
     in ES (``DateFacetBuilder.java:261-269``).
     """
     query_pred = lower_query(request.get("query", {"match_all": {}}))
-    out: dict[str, DateFacetQuery | TermListQuery] = {}
+    out: dict[str, DateFacetQuery | TermListQuery | CoreFacetQuery] = {}
     for name, spec in request.get("facets", {}).items():
         # facet-level siblings the reference's builders emit next to
         # the facet body: ``nested`` (DateFacetBuilder.java:283-296),
@@ -400,31 +362,24 @@ def parse_request(
         # ``facet_filter`` (DateFacetBuilder.java:267-273, lowered to
         # a Spark predicate on ``spec.filter`` — VERDICT r4 #5) are
         # honored; anything else raises rather than silently dropping.
-        known = {"date_facet", "term_list", "mode", "nested", "global", "facet_filter", "facetFilter"}
-        known.update(_CORE_FACET_KINDS)
-        unknown = set(spec) - known
-        if unknown:
-            raise ValueError(
-                f"facet {name!r}: unsupported facet-level key(s) {sorted(unknown)}"
-            )
-        core_kinds = [k for k in _CORE_FACET_KINDS if k in spec]
-        if ("date_facet" in spec) + ("term_list" in spec) + len(core_kinds) != 1:
+        spec = _strict_keys(spec, f"facet {name!r}", _FACET_LEVEL, noun="facet-level key")
+        kinds = [k for k in ("date_facet", "term_list", *_CORE_FACET_KINDS) if k in spec]
+        if len(kinds) != 1:
             raise ValueError(
                 f"facet {name!r}: exactly one facet type required, got {sorted(spec)}"
             )
-        if "date_facet" in spec:
-            if "mode" in spec:
-                # mode only exists on the term-list facet; dropping it
-                # here would be the silent-ignore this check forbids
-                raise ValueError(f"facet {name!r}: 'mode' is a term_list key")
-            q = parse_date_facet(spec["date_facet"])
-        elif "term_list" in spec:
-            q = parse_term_list(spec["term_list"], spec.get("mode", "collector"))
+        (kind,) = kinds
+        if "mode" in spec and kind != "term_list":
+            # mode only exists on the term-list facet; dropping it
+            # would be the silent-ignore this check forbids
+            raise ValueError(f"facet {name!r}: 'mode' is a term_list key")
+        if kind == "date_facet":
+            q = parse_date_facet(spec[kind])
+        elif kind == "term_list":
+            q = parse_term_list(spec[kind], spec.get("mode", "collector"))
         else:
-            if "mode" in spec:
-                raise ValueError(f"facet {name!r}: 'mode' is a term_list key")
-            q = parse_core_facet(core_kinds[0], spec[core_kinds[0]])
-        ffilter = spec.get("facet_filter", spec.get("facetFilter"))
+            q = parse_core_facet(kind, spec[kind])
+        ffilter = spec.get("facet_filter")
         is_global = bool(spec.get("global", False))
         # facet scope = (enclosing query ∧ facet_filter), both in root
         # scope; a global facet drops the query term but keeps its own
@@ -433,12 +388,8 @@ def parse_request(
             None if is_global else query_pred,
             lower_filter(ffilter) if ffilter is not None else None,
         ) if p is not None]
-        combined = None
-        for p in preds:
-            combined = p if combined is None else (combined & p)
+        combined = functools.reduce(operator.and_, preds) if preds else None
         if spec.get("nested") is not None or is_global or combined is not None:
-            import dataclasses
-
             q = dataclasses.replace(
                 q,
                 nested=spec.get("nested"),

@@ -4,8 +4,9 @@
 adds the other half of the search API — the scored hit list — so a
 user can POST the same ``_search`` JSON they send to Elasticsearch and
 get back (doc_id, score, rank[, snippet]) plus the parsed facet specs.
-Every query type dispatches to the operator that already implements
-its semantics (and carries its oracle gate):
+Every query type dispatches, through the kind → handler table
+``_KINDS``, to the operator that already implements its semantics
+(and carries its oracle gate):
 
 ====================  =================================================
 clause                operator
@@ -25,6 +26,7 @@ match``)
 ``regexp``            ``regexp.regexp_topk``
 ``more_like_this``    ``mlt.mlt_topk``
 ``bool`` w/ should    ``bm25.bool_should_topk``
+plain (boost 1)
 term clauses
 ``constant_score``    every filter match scores the boost (needs
                       ``docs``)
@@ -32,14 +34,16 @@ term clauses
                       ``lower_filter`` evaluated on ``docs``
 ``match_all``         every visible doc scores the boost
 ``term``              single-term BM25 (optional ``boost``)
+``terms``             ``bm25.score_queries`` / ``bool_should_topk``
+                      with m = ``minimum_match``
 ``ids``               listed visible docs score 1.0
 ``dis_max``           max over sub-queries + tie_breaker × the rest
 ``boosting``          positive query's scores, demoted by
                       ``negative_boost`` where the negative matches
 ``bool``              must/should/must_not over ANY scored sub-query
                       (sum-of-scores, Lucene coord-free like ES ≥ 2);
-                      all-term ``should``-only keeps the fast
-                      ``bool_should_topk`` path
+                      a ``should``-only bool of plain terms keeps
+                      the fast ``bool_should_topk`` path
 ``span_near``         ``span.span_near_topk`` — proximity over
                       span_term clauses (needs ``tokens``)
 ``span_first``        ``span.span_first_match`` gating BM25 (needs
@@ -61,9 +65,15 @@ Pagination (``from``/``size``) trims AFTER ranking, like ES; a
 ``highlight`` block attaches snippets via ``highlight.highlight_topk``
 semantics; a ``sort`` block re-ranks the FULL match set by field
 values (ties broken by doc_id — ES's tiebreak is shard doc order,
-which a deterministic engine replaces with the stable id). Anything
-unrecognized raises — the parser's strict no-silent-drop posture,
-same as ``request_parser``.
+which a deterministic engine replaces with the stable id).
+
+Parsing is table-driven and strict, like ``request_parser``: each
+``_KINDS`` entry lists the keys its body must and may carry, the
+field wrapping of its body, and the DataFrame (``tokens``/``docs``)
+its handler reads. One check (``_parse`` over
+``request_parser._strict_keys``) runs on every clause before
+dispatch, so an unknown key or kind raises ``ValueError`` and a
+missing required key raises ``ValueError`` — nothing silently drops.
 
 Every combinator composes the gated primitives through id-set joins
 and a groupBy on ``doc_id`` over CANDIDATE rows only — frames bounded
@@ -73,9 +83,10 @@ the 100 TB story of the underlying scorers carries through unchanged.
 
 from __future__ import annotations
 
+import functools
 import math
 import re
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -90,11 +101,31 @@ from ..operators.postings import InvertedIndex
 from ..operators.prefix import DEFAULT_MAX_EXPANSIONS, MAX_EDITS, prefix_topk
 from ..operators.regexp import regexp_topk
 from ..operators.wildcard import wildcard_topk
-from .request_parser import lower_filter
+from .request_parser import _one_key, _strict_keys, lower_filter
 
 DEFAULT_SIZE = 10  # the ES default
-# leaf queries whose only key is the pattern ``value``
-_EXPANDING = {"prefix": prefix_topk, "wildcard": wildcard_topk, "regexp": regexp_topk}
+
+
+class _Ctx(NamedTuple):
+    """What every clause handler reads besides its body."""
+
+    index: InvertedIndex
+    tokens: DataFrame | None
+    docs: DataFrame | None
+    prune: bool
+
+
+class _Kind(NamedTuple):
+    """One query kind: its handler and the shape of its body."""
+
+    run: Callable[[_Ctx, dict[str, Any], int], DataFrame] | None
+    required: str = ""  # space-separated keys the body must carry
+    optional: str = ""
+    needs: str = ""  # the DataFrame the handler reads: "tokens" or "docs"
+    # "" — the body is the object itself; "object" — {field: object};
+    # "bare" — {field: object or bare value}, the bare value read as
+    # {required: value}; "sibling" — {field: value, option: ...}
+    field: str = ""
 
 
 def _analyze(text: str) -> list[str]:
@@ -103,25 +134,9 @@ def _analyze(text: str) -> list[str]:
     return [t for t in re.split(r"\s+", text) if t]
 
 
-def _field_body(clause_body: dict[str, Any], kind: str) -> tuple[str, Any]:
-    if len(clause_body) != 1:
-        raise ValueError(f"{kind} query must name exactly one field, got {sorted(clause_body)}")
-    ((fld, spec),) = clause_body.items()
-    return fld, spec
-
-
-def _spec_value(spec: Any, kind: str, key: str, options: set[str]) -> Any:
-    """A leaf query's value: the bare form, or ``spec[key]`` of the
-    object form. Keys other than ``key`` and ``options`` raise rather
-    than being dropped."""
-    if not isinstance(spec, dict):
-        return spec
-    if key not in spec:
-        raise ValueError(f"{kind} query requires {key!r}")
-    unknown = set(spec) - options - {key}
-    if unknown:
-        raise ValueError(f"{kind} query: unsupported option(s) {sorted(unknown)}")
-    return spec[key]
+def _need(df: DataFrame | None, name: str, what: str) -> None:
+    if df is None:
+        raise ValueError(f"{what} needs the {name} DataFrame")
 
 
 def _weight(body: dict[str, Any], key: str, default: float, hi: float = math.inf) -> float:
@@ -135,10 +150,11 @@ def _weight(body: dict[str, Any], key: str, default: float, hi: float = math.inf
     return v
 
 
-def _rank(hits: DataFrame, k: int) -> DataFrame:
+def _rank(hits: DataFrame, k: int | None) -> DataFrame:
     """1-based dense ranking by (score desc, doc_id) within query_id,
-    trimmed to k — the ordering contract every scorer here shares."""
-    return hits.withColumn(
+    trimmed to k (None: untrimmed) — the ordering contract every
+    scorer here shares."""
+    ranked = hits.withColumn(
         "rank",
         F.row_number()
         .over(
@@ -147,7 +163,15 @@ def _rank(hits: DataFrame, k: int) -> DataFrame:
             )
         )
         .cast("long"),
-    ).filter(F.col("rank") <= k)
+    )
+    return ranked if k is None else ranked.filter(F.col("rank") <= k)
+
+
+def _hits(df: DataFrame, score: Any) -> DataFrame:
+    """``df``'s doc ids as query 0's hits, each scoring ``score``."""
+    return df.select(
+        F.lit(0).cast("long").alias("query_id"), F.col("doc_id"), score.alias("score")
+    )
 
 
 def _visible_doc_ids(index: InvertedIndex) -> DataFrame:
@@ -174,474 +198,366 @@ def _as_clause_list(val: Any, occur: str) -> list[dict[str, Any]]:
     raise ValueError(f"bool {occur} must be a clause object or a list of them")
 
 
-def _scored_hits(
-    index: InvertedIndex,
-    clause: dict[str, Any],
-    k: int,
-    tokens: DataFrame | None,
-    docs: DataFrame | None,
-    prune: bool,
-) -> DataFrame:
-    """(query_id=0, doc_id, score, rank) for one scored query clause."""
-    if len(clause) != 1:
-        raise ValueError(f"query clause must have exactly one key, got {sorted(clause)}")
-    ((kind, body),) = clause.items()
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, parts)
 
-    if kind == "match":
-        fld, spec = _field_body(body, "match")
-        text = _spec_value(spec, "match", "query", {"operator", "minimum_should_match"})
-        opts = spec if isinstance(spec, dict) else {}
-        operator = opts.get("operator", "or").lower()
-        msm = opts.get("minimum_should_match")
-        terms = _analyze(text)
-        if not terms:
-            raise ValueError("match query analyzed to zero terms")
-        if operator == "and":
-            msm = len(set(terms))
-        elif operator != "or":
-            raise ValueError(f"match operator must be and/or, got {operator!r}")
-        if msm is not None and int(msm) > 1:
-            return bool_should_topk(index, [(0, terms, int(msm))], k, prune=prune)
-        return score_queries(index, [(0, terms)], k, prune=prune)
 
-    if kind == "match_phrase":
-        if tokens is None:
-            raise ValueError("match_phrase needs the tokens DataFrame")
-        from ..operators.phrase import phrase_topk
+def _non_empty_list(body: dict[str, Any], key: str, kind: str) -> list[Any]:
+    vals = body[key]
+    if not isinstance(vals, list) or not vals:
+        raise ValueError(f"{kind} query requires a non-empty {key} list")
+    return vals
 
-        fld, spec = _field_body(body, "match_phrase")
-        text = _spec_value(spec, "match_phrase", "query", {"slop"})
-        if isinstance(spec, dict) and spec.get("slop", 0) != 0:
-            raise ValueError("match_phrase query: slop > 0 is not supported")
-        return phrase_topk(index, tokens, [(0, _analyze(text))], k)
 
-    if kind in _EXPANDING:
-        fld, spec = _field_body(body, kind)
-        val = _spec_value(spec, kind, "value", set())
-        return _EXPANDING[kind](index, [(0, val)], k, prune=prune)
+# -- one handler per query kind: (ctx, checked body, k) → hits ----------
 
-    if kind == "fuzzy":
-        fld, spec = _field_body(body, "fuzzy")
-        val = _spec_value(
-            spec, "fuzzy", "value", {"fuzziness", "prefix_length", "max_expansions"}
-        )
-        opts = spec if isinstance(spec, dict) else {}
-        return fuzzy_topk(
-            index,
-            [(0, val)],
-            k,
-            fuzziness=int(opts.get("fuzziness", MAX_EDITS)),
-            prefix_length=int(opts.get("prefix_length", 0)),
-            max_expansions=int(opts.get("max_expansions", DEFAULT_MAX_EXPANSIONS)),
-            prune=prune,
-        )
 
-    if kind == "more_like_this":
-        unknown = set(body) - {
-            "like_text", "fields", "max_query_terms", "min_term_freq", "min_doc_freq",
-        }
-        if unknown:
-            raise ValueError(f"more_like_this: unsupported option(s) {sorted(unknown)}")
-        return mlt_topk(
-            index,
-            [(0, body["like_text"])],
-            k,
-            max_query_terms=int(body.get("max_query_terms", 25)),
-            min_term_freq=int(body.get("min_term_freq", 2)),
-            min_doc_freq=int(body.get("min_doc_freq", 5)),
-            prune=prune,
-        )
+def _should(ctx: _Ctx, terms: list[str], m: int, k: int) -> DataFrame:
+    """Docs matching at least ``m`` of ``terms``, BM25-scored (the
+    plain OR scorer when m is 1)."""
+    if m > 1:
+        return bool_should_topk(ctx.index, [(0, terms, m)], k, prune=ctx.prune)
+    return score_queries(ctx.index, [(0, terms)], k, prune=ctx.prune)
 
-    if kind == "query_string":
-        unknown = set(body) - {"query", "default_operator"}
-        if unknown:
-            raise ValueError(f"query_string: unsupported option(s) {sorted(unknown)}")
-        from ..operators.query_string import query_string_topk
 
-        return query_string_topk(
-            index,
-            tokens,
-            body["query"],
-            k,
-            default_operator=str(body.get("default_operator", "or")).lower(),
-            prune=prune,
-        )
+def _match(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    terms = _analyze(b["query"])
+    if not terms:
+        raise ValueError("match query analyzed to zero terms")
+    operator = b.get("operator", "or").lower()
+    if operator not in ("and", "or"):
+        raise ValueError(f"match operator must be and/or, got {operator!r}")
+    msm = len(set(terms)) if operator == "and" else b.get("minimum_should_match")
+    return _should(ctx, terms, int(msm or 1), k)
 
-    if kind == "terms":
-        # ES terms query: bool-OR over the listed terms; 0.90's
-        # minimum_match knob maps to minimum_should_match
-        body = dict(body)
-        mm = int(body.pop("minimum_match", body.pop("minimum_should_match", 1)))
-        fld, vals = _field_body(body, "terms")
-        if not isinstance(vals, list) or not vals:
-            raise ValueError("terms query requires a non-empty term list")
-        terms = [str(v) for v in vals]
-        if mm > 1:
-            return bool_should_topk(index, [(0, terms, mm)], k, prune=prune)
-        return score_queries(index, [(0, terms)], k, prune=prune)
 
-    if kind == "span_near":
-        unknown = set(body) - {"clauses", "slop", "in_order"}
-        if unknown:
-            raise ValueError(f"span_near query: unsupported key(s) {sorted(unknown)}")
-        clauses = body.get("clauses")
-        if not isinstance(clauses, list) or not clauses:
-            raise ValueError("span_near requires a non-empty clauses list")
-        if tokens is None:
-            raise ValueError("span_near needs the tokens DataFrame")
-        terms = []
-        for sub in clauses:
-            if set(sub) != {"span_term"}:
-                raise ValueError(
-                    f"span_near clauses must be span_term, got {sorted(sub)}"
-                )
-            _, val = _field_body(sub["span_term"], "span_term")
-            terms.append(str(val if not isinstance(val, dict) else val["value"]))
-        from ..operators.span import span_near_topk
+def _match_phrase(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    from ..operators.phrase import phrase_topk
 
-        return span_near_topk(
-            index,
-            tokens,
-            [(0, terms)],
-            k,
-            slop=int(body.get("slop", 0)),
-            in_order=bool(body.get("in_order", False)),
-        )
+    if b.get("slop", 0) != 0:
+        raise ValueError("match_phrase query: slop > 0 is not supported")
+    return phrase_topk(ctx.index, ctx.tokens, [(0, _analyze(b["query"]))], k)
 
-    if kind == "span_first":
-        unknown = set(body) - {"match", "end"}
-        if unknown:
-            raise ValueError(f"span_first query: unsupported key(s) {sorted(unknown)}")
-        if "end" not in body or "match" not in body:
-            raise ValueError("span_first requires match and end")
-        match = body["match"]
-        if set(match) != {"span_term"}:
-            raise ValueError("span_first match must be a span_term clause")
-        if tokens is None:
-            raise ValueError("span_first needs the tokens DataFrame")
-        _, val = _field_body(match["span_term"], "span_term")
-        term = str(val if not isinstance(val, dict) else val["value"])
-        from ..operators.span import span_first_match
 
-        matched = span_first_match(
-            index, tokens, [(0, term)], end=int(body["end"])
-        ).select("doc_id")
-        scored = score_queries(
-            index, [(0, [term])], index.n_docs, prune=prune, ranked=False
-        )
-        return _rank(
-            scored.join(matched, "doc_id", "left_semi").select(
-                "query_id", "doc_id", "score"
-            ),
-            k,
-        )
+def _terms(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    # ES terms query: bool-OR over the listed terms; 0.90's
+    # minimum_match is minimum_should_match's older name
+    if "minimum_match" in b and "minimum_should_match" in b:
+        raise ValueError("terms query: give minimum_match or minimum_should_match, not both")
+    terms = [str(v) for v in _non_empty_list(b, "terms", "terms")]
+    return _should(ctx, terms, int(b.get("minimum_match", b.get("minimum_should_match", 1))), k)
 
-    if kind == "match_all":
-        unknown = set(body) - {"boost"}
-        if unknown:
-            raise ValueError(f"match_all query: unsupported key(s) {sorted(unknown)}")
-        boost = round(_weight(body, "boost", 1.0), 6)
-        return _rank(
-            _visible_doc_ids(index).select(
-                F.lit(0).cast("long").alias("query_id"),
-                F.col("doc_id"),
-                F.lit(boost).cast("double").alias("score"),
-            ),
-            k,
-        )
 
-    if kind == "term":
-        fld, spec = _field_body(body, "term")
-        val = str(_spec_value(spec, "term", "value", {"boost"}))
-        boost = _weight(spec, "boost", 1.0) if isinstance(spec, dict) else 1.0
-        if boost == 1.0:
-            return score_queries(index, [(0, [val])], k, prune=prune)
-        # boost rescales AFTER the 6-dp rounding the scorer applies, and
-        # re-rounds — ties can move across the grid, so re-rank the full
-        # match set instead of trusting the unscaled ranks
-        scored = score_queries(
-            index, [(0, [val])], index.n_docs, prune=prune, ranked=False
-        )
-        return _rank(
-            scored.select(
-                "query_id",
-                "doc_id",
-                round6_oracle(F.col("score") * boost).alias("score"),
-            ),
-            k,
-        )
+def _expand(topk: Callable[..., DataFrame], ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    return topk(ctx.index, [(0, b["value"])], k, prune=ctx.prune)
 
-    if kind == "ids":
-        unknown = set(body) - {"values", "type"}
-        if unknown:
-            raise ValueError(f"ids query: unsupported key(s) {sorted(unknown)}")
-        vals = body.get("values")
-        if not isinstance(vals, list) or not vals:
-            raise ValueError("ids query requires a non-empty values list")
-        return _rank(
-            _visible_doc_ids(index)
-            .filter(F.col("doc_id").isin([int(v) for v in vals]))
-            .select(
-                F.lit(0).cast("long").alias("query_id"),
-                F.col("doc_id"),
-                F.lit(1.0).cast("double").alias("score"),
-            ),
-            k,
-        )
 
-    if kind == "dis_max":
-        unknown = set(body) - {"queries", "tie_breaker", "boost"}
-        if unknown:
-            raise ValueError(f"dis_max query: unsupported key(s) {sorted(unknown)}")
-        subs = body.get("queries")
-        if not isinstance(subs, list) or not subs:
-            raise ValueError("dis_max requires a non-empty queries list")
-        tie = _weight(body, "tie_breaker", 0.0, 1.0)
-        boost = _weight(body, "boost", 1.0)
-        parts = [
-            _scored_hits(index, sub, index.n_docs, tokens, docs, prune).select(
-                "doc_id", "score"
-            )
-            for sub in subs
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        # per-doc dismax over the union of candidate rows (bounded by
-        # Σ sub-query match counts, not the corpus)
-        agg = u.groupBy("doc_id").agg(
-            F.max("score").alias("best"), F.sum("score").alias("total")
-        )
-        combined = (
-            F.col("best") + F.lit(tie) * (F.col("total") - F.col("best"))
-        ) * F.lit(boost)
-        return _rank(
-            agg.select(
-                F.lit(0).cast("long").alias("query_id"),
-                F.col("doc_id"),
-                round6_oracle(combined).alias("score"),
-            ),
-            k,
-        )
-
-    if kind == "boosting":
-        unknown = set(body) - {"positive", "negative", "negative_boost"}
-        if unknown:
-            raise ValueError(f"boosting query: unsupported key(s) {sorted(unknown)}")
-        if "positive" not in body or "negative" not in body:
-            raise ValueError("boosting query requires positive and negative")
-        nb = _weight(body, "negative_boost", 0.5, 1.0)
-        pos = _scored_hits(
-            index, body["positive"], index.n_docs, tokens, docs, prune
-        )
-        neg = (
-            _scored_hits(index, body["negative"], index.n_docs, tokens, docs, prune)
-            .select("doc_id")
-            .distinct()
-            .withColumn("_demote", F.lit(True))
-        )
-        demoted = pos.join(neg, "doc_id", "left").select(
-            "query_id",
-            "doc_id",
-            round6_oracle(
-                F.col("score")
-                * F.when(F.col("_demote"), F.lit(nb)).otherwise(F.lit(1.0))
-            ).alias("score"),
-        )
-        return _rank(demoted, k)
-
-    if kind == "bool":
-        unknown = set(body) - {"must", "should", "must_not", "minimum_should_match"}
-        if unknown:
-            raise ValueError(
-                f"scored bool query supports must/should/must_not/"
-                f"minimum_should_match, got {sorted(unknown)} "
-                "(filter-context bool belongs in 'filtered')"
-            )
-        must = _as_clause_list(body.get("must"), "must")
-        should = _as_clause_list(body.get("should"), "should")
-        must_not = _as_clause_list(body.get("must_not"), "must_not")
-        if not must and not should:
-            raise ValueError("scored bool query needs at least one must or should clause")
-        # fast path: the original all-term should-only form keeps the
-        # in-scorer match counting (one postings pass, no per-clause jobs)
-        if not must and not must_not and all(
-            set(c) == {"term"} for c in should
-        ):
-            terms = []
-            for sub in should:
-                ((_, val),) = sub["term"].items()
-                terms.append(str(val if not isinstance(val, dict) else val["value"]))
-            m = int(body.get("minimum_should_match", 1))
-            return bool_should_topk(index, [(0, terms, m)], k, prune=prune)
-        # Lucene BooleanQuery, coord-free (ES ≥ 2 semantics): score =
-        # Σ matched clause scores; every must clause gates candidacy;
-        # minimum_should_match applies to should clauses (default 1
-        # when the query is should-only, else 0)
-        msm = int(
-            body.get("minimum_should_match", 1 if (should and not must) else 0)
-        )
-        tagged = []
-        for occur, clauses in (("must", must), ("should", should)):
-            for sub in clauses:
-                tagged.append(
-                    _scored_hits(index, sub, index.n_docs, tokens, docs, prune)
-                    .select(
-                        "doc_id",
-                        "score",
-                        F.lit(occur == "must").alias("_is_must"),
-                    )
-                )
-        u = tagged[0]
-        for p in tagged[1:]:
-            u = u.unionByName(p)
-        agg = u.groupBy("doc_id").agg(
-            F.round(F.sum("score"), 6).alias("score"),
-            F.sum(F.when(F.col("_is_must"), 1).otherwise(0)).alias("_n_must"),
-            F.sum(F.when(F.col("_is_must"), 0).otherwise(1)).alias("_n_should"),
-        )
-        hits = agg.filter(
-            (F.col("_n_must") == len(must)) & (F.col("_n_should") >= msm)
-        )
-        for sub in must_not:
-            hits = hits.join(
-                _scored_hits(
-                    index, sub, index.n_docs, tokens, docs, prune
-                ).select("doc_id"),
-                "doc_id",
-                "left_anti",
-            )
-        return _rank(
-            hits.select(
-                F.lit(0).cast("long").alias("query_id"), "doc_id", "score"
-            ),
-            k,
-        )
-
-    if kind == "constant_score":
-        # every filter-matched doc scores exactly the boost (ES
-        # ConstantScoreQuery); ranks tie-break by doc_id
-        unknown = set(body) - {"filter", "boost"}
-        if unknown:
-            raise ValueError(f"constant_score query: unsupported key(s) {sorted(unknown)}")
-        if "filter" not in body:
-            raise ValueError("constant_score query requires a filter")
-        if docs is None:
-            raise ValueError("constant_score needs the docs DataFrame")
-        boost = round(_weight(body, "boost", 1.0), 6)
-        return (
-            docs.filter(lower_filter(body["filter"]))
-            .select(
-                F.lit(0).cast("long").alias("query_id"),
-                F.col("doc_id"),
-                F.lit(boost).cast("double").alias("score"),
-            )
-            .withColumn(
-                "rank",
-                F.row_number()
-                .over(Window.partitionBy("query_id").orderBy(F.col("doc_id")))
-                .cast("long"),
-            )
-            .filter(F.col("rank") <= k)
-        )
-
-    if kind == "filtered":
-        unknown = set(body) - {"query", "filter"}
-        if unknown:
-            raise ValueError(f"filtered query: unsupported key(s) {sorted(unknown)}")
-        if docs is None:
-            raise ValueError("filtered query needs the docs DataFrame to evaluate the filter")
-        inner = body.get("query", {"match_all": {}})
-        pred = lower_filter(body["filter"])
-        # ES filters the candidate set BEFORE ranking: score everything
-        # (k = n_docs — the scorers compute all scores before the
-        # group-limit anyway), intersect with the filter on docs, then
-        # re-rank. At scale the filtered id set rides a broadcast-able
-        # semi join (filter selectivity is the knob, same as ES).
-        scored = _scored_hits(index, inner, index.n_docs, tokens, docs, prune)
-        keep = docs.filter(pred).select(F.col("doc_id"))
-        return (
-            scored.join(keep, "doc_id", "left_semi")
-            .withColumn(
-                "rank",
-                F.row_number()
-                .over(
-                    Window.partitionBy("query_id").orderBy(
-                        F.col("score").desc(), F.col("doc_id")
-                    )
-                )
-                .cast("long"),
-            )
-        )
-
-    if kind == "common":
-        # Lucene CommonTermsQuery (the stopword-free frequent-term
-        # query) — semantics in operators/common_terms.py
-        from ..operators.common_terms import common_terms_topk
-
-        fld, spec = _field_body(body, "common")
-        if not isinstance(spec, dict) or "query" not in spec:
-            raise ValueError("common query requires a {field: {query: ...}} body")
-        unknown = set(spec) - {
-            "query", "cutoff_frequency", "low_freq_operator",
-            "high_freq_operator", "minimum_should_match",
-        }
-        if unknown:
-            raise ValueError(f"common query: unsupported option(s) {sorted(unknown)}")
-        terms = _analyze(str(spec["query"]))
-        if not terms:
-            raise ValueError("common query analyzed to zero terms")
-        msm = spec.get("minimum_should_match")
-        if isinstance(msm, dict):
-            unknown = set(msm) - {"low_freq"}
-            if unknown:
-                raise ValueError(
-                    f"common minimum_should_match: unsupported key(s) {sorted(unknown)}"
-                )
-            msm = msm["low_freq"]
-        return common_terms_topk(
-            index,
-            [(0, terms)],
-            k,
-            cutoff_frequency=float(spec.get("cutoff_frequency", 0.01)),
-            low_freq_operator=spec.get("low_freq_operator", "or"),
-            high_freq_operator=spec.get("high_freq_operator", "or"),
-            minimum_should_match=int(msm) if msm is not None else None,
-            corpus=tokens,  # scale path when available (None = postings path)
-        )
-
-    if kind == "function_score":
-        # decay/boost functions over ANY inner scored query — the
-        # inner query scores UNCAPPED (functions re-rank everything),
-        # then operators.function_score.apply_functions does the
-        # closed-form combine (see its module docstring)
-        from ..operators.function_score import apply_functions
-
-        unknown = set(body) - {"query", "functions", "score_mode", "boost_mode"}
-        if unknown:
-            raise ValueError(f"function_score query: unsupported key(s) {sorted(unknown)}")
-        if "query" not in body or "functions" not in body:
-            raise ValueError("function_score requires query and functions")
-        if docs is None:
-            raise ValueError("function_score needs the docs DataFrame for decay fields")
-        inner = _scored_hits(
-            index, body["query"], index.n_docs, tokens, docs, prune
-        ).drop("rank")
-        return apply_functions(
-            inner,
-            docs,
-            body["functions"],
-            k,
-            boost_mode=body.get("boost_mode", "multiply"),
-            score_mode=body.get("score_mode", "multiply"),
-        )
-
-    raise ValueError(
-        f"unsupported search query type {kind!r} (supported: match, match_phrase, "
-        "term, terms, match_all, ids, prefix, fuzzy, wildcard, regexp, "
-        "more_like_this, query_string, bool, dis_max, boosting, "
-        "span_near, span_first, constant_score, filtered, function_score, common)"
+def _fuzzy(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    return fuzzy_topk(
+        ctx.index,
+        [(0, b["value"])],
+        k,
+        fuzziness=int(b.get("fuzziness", MAX_EDITS)),
+        prefix_length=int(b.get("prefix_length", 0)),
+        max_expansions=int(b.get("max_expansions", DEFAULT_MAX_EXPANSIONS)),
+        prune=ctx.prune,
     )
+
+
+def _more_like_this(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    return mlt_topk(
+        ctx.index,
+        [(0, b["like_text"])],
+        k,
+        max_query_terms=int(b.get("max_query_terms", 25)),
+        min_term_freq=int(b.get("min_term_freq", 2)),
+        min_doc_freq=int(b.get("min_doc_freq", 5)),
+        prune=ctx.prune,
+    )
+
+
+def _query_string(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    from ..operators.query_string import query_string_topk
+
+    return query_string_topk(
+        ctx.index,
+        ctx.tokens,
+        b["query"],
+        k,
+        default_operator=str(b.get("default_operator", "or")).lower(),
+        prune=ctx.prune,
+    )
+
+
+def _span_term(clause: Any) -> str:
+    """The term of a ``{"span_term": {field: value}}`` span clause."""
+    return str(_parse(clause, _SPAN_KINDS)[2]["value"])
+
+
+def _span_near(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    from ..operators.span import span_near_topk
+
+    terms = [_span_term(c) for c in _non_empty_list(b, "clauses", "span_near")]
+    return span_near_topk(
+        ctx.index,
+        ctx.tokens,
+        [(0, terms)],
+        k,
+        slop=int(b.get("slop", 0)),
+        in_order=bool(b.get("in_order", False)),
+    )
+
+
+def _span_first(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    from ..operators.span import span_first_match
+
+    term = _span_term(b["match"])
+    matched = span_first_match(
+        ctx.index, ctx.tokens, [(0, term)], end=int(b["end"])
+    ).select("doc_id")
+    scored = score_queries(
+        ctx.index, [(0, [term])], ctx.index.n_docs, prune=ctx.prune, ranked=False
+    )
+    return _rank(
+        scored.join(matched, "doc_id", "left_semi").select("query_id", "doc_id", "score"),
+        k,
+    )
+
+
+def _match_all(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    boost = round(_weight(b, "boost", 1.0), 6)
+    return _rank(_hits(_visible_doc_ids(ctx.index), F.lit(boost).cast("double")), k)
+
+
+def _term(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    val, boost = str(b["value"]), _weight(b, "boost", 1.0)
+    if boost == 1.0:
+        return score_queries(ctx.index, [(0, [val])], k, prune=ctx.prune)
+    # boost rescales AFTER the 6-dp rounding the scorer applies, and
+    # re-rounds — ties can move across the grid, so re-rank the full
+    # match set instead of trusting the unscaled ranks
+    scored = score_queries(
+        ctx.index, [(0, [val])], ctx.index.n_docs, prune=ctx.prune, ranked=False
+    )
+    return _rank(
+        scored.select(
+            "query_id", "doc_id", round6_oracle(F.col("score") * boost).alias("score")
+        ),
+        k,
+    )
+
+
+def _ids(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    vals = [int(v) for v in _non_empty_list(b, "values", "ids")]
+    ids = _visible_doc_ids(ctx.index).filter(F.col("doc_id").isin(vals))
+    return _rank(_hits(ids, F.lit(1.0).cast("double")), k)
+
+
+def _dis_max(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    subs = _non_empty_list(b, "queries", "dis_max")
+    tie = _weight(b, "tie_breaker", 0.0, 1.0)
+    boost = _weight(b, "boost", 1.0)
+    # per-doc dismax over the union of candidate rows (bounded by
+    # Σ sub-query match counts, not the corpus)
+    u = _union([_scored_hits(ctx, sub).select("doc_id", "score") for sub in subs])
+    agg = u.groupBy("doc_id").agg(F.max("score").alias("best"), F.sum("score").alias("total"))
+    combined = (
+        F.col("best") + F.lit(tie) * (F.col("total") - F.col("best"))
+    ) * F.lit(boost)
+    return _rank(_hits(agg, round6_oracle(combined)), k)
+
+
+def _boosting(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    nb = _weight(b, "negative_boost", 0.5, 1.0)
+    pos = _scored_hits(ctx, b["positive"])
+    neg = (
+        _scored_hits(ctx, b["negative"])
+        .select("doc_id")
+        .distinct()
+        .withColumn("_demote", F.lit(True))
+    )
+    demoted = pos.join(neg, "doc_id", "left").select(
+        "query_id",
+        "doc_id",
+        round6_oracle(
+            F.col("score") * F.when(F.col("_demote"), F.lit(nb)).otherwise(F.lit(1.0))
+        ).alias("score"),
+    )
+    return _rank(demoted, k)
+
+
+def _bool(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    must, should, must_not = (
+        _as_clause_list(b.get(occur), occur) for occur in ("must", "should", "must_not")
+    )
+    if not must and not should:
+        raise ValueError("scored bool query needs at least one must or should clause")
+    # fast path: a should-only bool of plain (boost 1) terms keeps the
+    # in-scorer match counting (one postings pass, no per-clause jobs)
+    if not must and not must_not:
+        parsed = [_parse(sub) for sub in should]
+        if all(kind == "term" and _weight(s, "boost", 1.0) == 1.0 for kind, _, s in parsed):
+            terms = [str(s["value"]) for _, _, s in parsed]
+            m = int(b.get("minimum_should_match", 1))
+            return bool_should_topk(ctx.index, [(0, terms, m)], k, prune=ctx.prune)
+    # Lucene BooleanQuery, coord-free (ES ≥ 2 semantics): score =
+    # Σ matched clause scores; every must clause gates candidacy;
+    # minimum_should_match applies to should clauses (default 1
+    # when the query is should-only, else 0)
+    msm = int(b.get("minimum_should_match", 1 if (should and not must) else 0))
+    u = _union([
+        _scored_hits(ctx, sub).select("doc_id", "score", F.lit(occur == "must").alias("_is_must"))
+        for occur, clauses in (("must", must), ("should", should))
+        for sub in clauses
+    ])
+    agg = u.groupBy("doc_id").agg(
+        F.round(F.sum("score"), 6).alias("score"),
+        F.sum(F.when(F.col("_is_must"), 1).otherwise(0)).alias("_n_must"),
+        F.sum(F.when(F.col("_is_must"), 0).otherwise(1)).alias("_n_should"),
+    )
+    hits = agg.filter((F.col("_n_must") == len(must)) & (F.col("_n_should") >= msm))
+    for sub in must_not:
+        hits = hits.join(_scored_hits(ctx, sub).select("doc_id"), "doc_id", "left_anti")
+    return _rank(_hits(hits, F.col("score")), k)
+
+
+def _constant_score(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    # every filter-matched doc scores exactly the boost (ES
+    # ConstantScoreQuery); the scores tie, so ranks follow doc_id
+    boost = round(_weight(b, "boost", 1.0), 6)
+    matched = ctx.docs.filter(lower_filter(b["filter"]))
+    return _rank(_hits(matched, F.lit(boost).cast("double")), k)
+
+
+def _filtered(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    # ES filters the candidate set BEFORE ranking: score everything
+    # (k = n_docs — the scorers compute all scores before the
+    # group-limit anyway), intersect with the filter on docs, then
+    # re-rank. At scale the filtered id set rides a broadcast-able
+    # semi join (filter selectivity is the knob, same as ES). The ranks
+    # stay untrimmed: a top-level caller trims them to its page, and a
+    # caller that drops them (_count, combinators) lets Catalyst prune
+    # the window.
+    pred = lower_filter(b["filter"])
+    scored = _scored_hits(ctx, b.get("query", {"match_all": {}}))
+    keep = ctx.docs.filter(pred).select(F.col("doc_id"))
+    return _rank(scored.join(keep, "doc_id", "left_semi"), None)
+
+
+def _common(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    # Lucene CommonTermsQuery (the stopword-free frequent-term
+    # query) — semantics in operators/common_terms.py
+    from ..operators.common_terms import common_terms_topk
+
+    terms = _analyze(str(b["query"]))
+    if not terms:
+        raise ValueError("common query analyzed to zero terms")
+    msm = b.get("minimum_should_match")
+    if isinstance(msm, dict):
+        msm = _strict_keys(msm, "common minimum_should_match", (), ("low_freq",))["low_freq"]
+    return common_terms_topk(
+        ctx.index,
+        [(0, terms)],
+        k,
+        cutoff_frequency=float(b.get("cutoff_frequency", 0.01)),
+        low_freq_operator=b.get("low_freq_operator", "or"),
+        high_freq_operator=b.get("high_freq_operator", "or"),
+        minimum_should_match=int(msm) if msm is not None else None,
+        corpus=ctx.tokens,  # scale path when available (None = postings path)
+    )
+
+
+def _function_score(ctx: _Ctx, b: dict[str, Any], k: int) -> DataFrame:
+    # decay/boost functions over ANY inner scored query — the inner
+    # query scores UNCAPPED (functions re-rank everything), then
+    # operators.function_score.apply_functions does the closed-form
+    # combine (see its module docstring)
+    from ..operators.function_score import apply_functions
+
+    return apply_functions(
+        _scored_hits(ctx, b["query"]).drop("rank"),
+        ctx.docs,
+        b["functions"],
+        k,
+        boost_mode=b.get("boost_mode", "multiply"),
+        score_mode=b.get("score_mode", "multiply"),
+    )
+
+
+# kind → handler and body shape; the order is the one the unsupported-
+# kind message lists
+_KINDS: dict[str, _Kind] = {
+    "match": _Kind(_match, "query", "operator minimum_should_match", field="bare"),
+    "match_phrase": _Kind(_match_phrase, "query", "slop", needs="tokens", field="bare"),
+    "term": _Kind(_term, "value", "boost", field="bare"),
+    "terms": _Kind(_terms, "terms", "minimum_match minimum_should_match", field="sibling"),
+    "match_all": _Kind(_match_all, "", "boost"),
+    "ids": _Kind(_ids, "values", "type"),
+    "prefix": _Kind(functools.partial(_expand, prefix_topk), "value", field="bare"),
+    "fuzzy": _Kind(
+        _fuzzy, "value", "fuzziness prefix_length max_expansions", field="bare"
+    ),
+    "wildcard": _Kind(functools.partial(_expand, wildcard_topk), "value", field="bare"),
+    "regexp": _Kind(functools.partial(_expand, regexp_topk), "value", field="bare"),
+    "more_like_this": _Kind(
+        _more_like_this, "like_text", "fields max_query_terms min_term_freq min_doc_freq"
+    ),
+    "query_string": _Kind(_query_string, "query", "default_operator"),
+    "bool": _Kind(_bool, "", "must should must_not minimum_should_match"),
+    "dis_max": _Kind(_dis_max, "queries", "tie_breaker boost"),
+    "boosting": _Kind(_boosting, "positive negative", "negative_boost"),
+    "span_near": _Kind(_span_near, "clauses", "slop in_order", needs="tokens"),
+    "span_first": _Kind(_span_first, "match end", needs="tokens"),
+    "constant_score": _Kind(_constant_score, "filter", "boost", needs="docs"),
+    "filtered": _Kind(_filtered, "filter", "query", needs="docs"),
+    "function_score": _Kind(
+        _function_score, "query functions", "score_mode boost_mode", needs="docs"
+    ),
+    "common": _Kind(
+        _common,
+        "query",
+        "cutoff_frequency low_freq_operator high_freq_operator minimum_should_match",
+        field="object",
+    ),
+}
+# the leaf clauses read only for their value: span clauses and the
+# rescore query
+_SPAN_KINDS = {"span_term": _Kind(None, "value", field="bare")}
+_RESCORE_KINDS = {k: _Kind(None, "query", field="bare") for k in ("match", "match_phrase")}
+
+
+def _parse(
+    clause: Any, kinds: dict[str, _Kind] = _KINDS
+) -> tuple[str, _Kind, dict[str, Any]]:
+    """A clause → (kind, its table entry, its body as a checked
+    object): the one key check every clause passes before dispatch.
+    Field-wrapped bodies are unwrapped (the engine indexes one field,
+    so the name is not read)."""
+    kind, body = _one_key(clause, "query clause")
+    entry = kinds.get(kind)
+    if entry is None:
+        raise ValueError(
+            f"unsupported search query type {kind!r} (supported: {', '.join(kinds)})"
+        )
+    what = f"{kind} query"
+    if entry.field == "sibling" and isinstance(body, dict):
+        opts = {o: v for o, v in body.items() if o in entry.optional.split()}
+        field = {f: v for f, v in body.items() if f not in opts}
+        body = {**opts, entry.required: _one_key(field, f"{what} field")[1]}
+    elif entry.field:
+        _, body = _one_key(body, f"{what} field")
+        if entry.field == "bare" and not isinstance(body, dict):
+            body = {entry.required: body}
+    return kind, entry, _strict_keys(body, what, entry.optional.split(), entry.required.split())
+
+
+def _scored_hits(ctx: _Ctx, clause: Any, k: int | None = None) -> DataFrame:
+    """(query_id=0, doc_id, score, rank) for one scored query clause,
+    trimmed to the top ``k`` (default: every match)."""
+    kind, entry, body = _parse(clause)
+    if entry.needs:
+        _need(getattr(ctx, entry.needs), entry.needs, kind)
+    return entry.run(ctx, body, ctx.index.n_docs if k is None else k)
 
 
 def search_topk(
@@ -659,15 +575,13 @@ def search_topk(
     to ``request_parser.parse_request`` for the facet side (the two
     compose; this function validates but ignores the ``facets`` key).
     """
-    known = {
-        "query", "size", "from", "highlight", "facets", "sort", "rescore",
-        "search_after",
-    }
-    unknown = set(request) - known
-    if unknown:
-        raise ValueError(f"unsupported _search key(s) {sorted(unknown)}")
-    if "query" not in request:
-        raise ValueError("_search request requires a query clause")
+    request = _strict_keys(
+        request,
+        "_search",
+        ("size", "from", "highlight", "facets", "sort", "rescore", "search_after"),
+        ("query",),
+    )
+    ctx = _Ctx(index, tokens, docs, prune)
     size = int(request.get("size", DEFAULT_SIZE))
     offset = int(request.get("from", 0))
     if size < 1 or offset < 0:
@@ -689,9 +603,7 @@ def search_topk(
         if not isinstance(after, (list, tuple)) or len(after) != 2:
             raise ValueError("search_after must be [last_score, last_doc_id]")
         s_a, d_a = round(float(after[0]), 6), int(after[1])
-        scored = _scored_hits(
-            index, request["query"], index.n_docs, tokens, docs, prune
-        ).drop("rank")
+        scored = _scored_hits(ctx, request["query"]).drop("rank")
         hits = _rank(
             scored.filter(
                 (F.col("score") < s_a)
@@ -702,43 +614,18 @@ def search_topk(
     elif resc is not None:
         if sort is not None:
             raise ValueError("rescore does not combine with sort (sort replaces relevance)")
-        if tokens is None:
-            raise ValueError("rescore needs the tokens DataFrame")
+        _need(tokens, "tokens", "rescore")
         from ..operators.rescore import rescore_window
 
-        unknown = set(resc) - {"window_size", "query"}
-        if unknown:
-            raise ValueError(f"rescore: unsupported key(s) {sorted(unknown)}")
-        if "window_size" not in resc or "query" not in resc:
-            raise ValueError("rescore requires window_size and query")
-        rq = resc["query"]
-        unknown = set(rq) - {"rescore_query", "query_weight", "rescore_query_weight"}
-        if unknown:
-            raise ValueError(f"rescore query: unsupported key(s) {sorted(unknown)}")
-        if "rescore_query" not in rq:
-            raise ValueError("rescore query requires rescore_query")
-        inner = rq["rescore_query"]
-        if len(inner) != 1 or next(iter(inner)) not in ("match", "match_phrase"):
-            raise ValueError(
-                "rescore_query must be a match or match_phrase clause "
-                f"(got {sorted(inner)})"
-            )
-        ((rkind, rbody),) = inner.items()
-        _, rspec = _field_body(rbody, rkind)
-        if isinstance(rspec, dict):
-            # validate BEFORE indexing: a dict body without "query" must
-            # raise the parser's ValueError, not a bare KeyError (ADVICE r6)
-            if set(rspec) - {"query"}:
-                raise ValueError(
-                    f"rescore {rkind}: unsupported option(s) "
-                    f"{sorted(set(rspec) - {'query'})}"
-                )
-            if "query" not in rspec:
-                raise ValueError(f"rescore {rkind}: missing required 'query'")
-            rtext = rspec["query"]
-        else:
-            rtext = rspec
-        rterms = _analyze(str(rtext))
+        resc = _strict_keys(resc, "rescore", (), ("window_size", "query"))
+        rq = _strict_keys(
+            resc["query"],
+            "rescore query",
+            ("query_weight", "rescore_query_weight"),
+            ("rescore_query",),
+        )
+        rkind, _, rspec = _parse(rq["rescore_query"], _RESCORE_KINDS)
+        rterms = _analyze(str(rspec["query"]))
         if not rterms:
             raise ValueError("rescore query analyzed to zero terms")
         window = int(resc["window_size"])
@@ -746,9 +633,7 @@ def search_topk(
             raise ValueError(
                 f"rescore window_size ({window}) must cover from+size ({offset + size})"
             )
-        base = _scored_hits(
-            index, request["query"], window, tokens, docs, prune
-        ).drop("rank")
+        base = _scored_hits(ctx, request["query"], window).drop("rank")
         hits = rescore_window(
             index,
             base,
@@ -764,12 +649,9 @@ def search_topk(
         # (ES semantics: sort replaces relevance ordering; score still
         # reported). Ties break by doc_id — the deterministic stand-in
         # for ES's shard-doc-order tiebreak.
-        if docs is None:
-            raise ValueError("sort needs the docs DataFrame for field values")
+        _need(docs, "docs", "sort")
         sort_cols, sort_fields = _sort_order(sort)
-        matched = _scored_hits(
-            index, request["query"], index.n_docs, tokens, docs, prune
-        ).drop("rank")
+        matched = _scored_hits(ctx, request["query"]).drop("rank")
         hits = (
             matched.join(docs.select("doc_id", *sort_fields), "doc_id")
             .withColumn(
@@ -785,16 +667,13 @@ def search_topk(
             .filter((F.col("rank") > offset) & (F.col("rank") <= offset + size))
         )
     else:
-        hits = _scored_hits(
-            index, request["query"], offset + size, tokens, docs, prune
-        ).filter((F.col("rank") > offset) & (F.col("rank") <= offset + size))
+        hits = _scored_hits(ctx, request["query"], offset + size).filter(
+            (F.col("rank") > offset) & (F.col("rank") <= offset + size)
+        )
     hl = request.get("highlight")
     if hl is not None:
-        if docs is None:
-            raise ValueError("highlight needs the docs DataFrame")
-        unknown = set(hl) - {"fragment_size", "pre_tags", "post_tags", "fields"}
-        if unknown:
-            raise ValueError(f"highlight: unsupported option(s) {sorted(unknown)}")
+        _need(docs, "docs", "highlight")
+        hl = _strict_keys(hl, "highlight", ("fragment_size", "pre_tags", "post_tags", "fields"))
         from ..operators.highlight import (
             DEFAULT_FRAG_SIZE,
             DEFAULT_POST_TAG,
@@ -838,15 +717,9 @@ def _sort_order(sort: Any) -> tuple[list[F.Column], list[str]]:
             ((fld, spec),) = e.items()
             if isinstance(spec, str):
                 order = spec
-            elif isinstance(spec, dict):
-                unknown = set(spec) - {"order"}
-                if unknown:
-                    raise ValueError(
-                        f"sort field {fld!r}: unsupported option(s) {sorted(unknown)}"
-                    )
-                order = spec.get("order", "desc" if fld == "_score" else "asc")
             else:
-                raise ValueError(f"sort field {fld!r}: bad spec {spec!r}")
+                spec = _strict_keys(spec, f"sort field {fld!r}", ("order",))
+                order = spec.get("order", "desc" if fld == "_score" else "asc")
         else:
             raise ValueError(f"bad sort entry {e!r}")
         if order not in ("asc", "desc"):
@@ -860,25 +733,25 @@ def _sort_order(sort: Any) -> tuple[list[F.Column], list[str]]:
     return cols, list(dict.fromkeys(fields))
 
 
-def _highlight_terms(clause: dict[str, Any]) -> list[str]:
-    """The literal terms a query contributes to highlighting (the
+def _highlight_terms(clause: Any) -> list[str]:
+    """The literal terms a query contributes to highlighting: those of
+    its match, match_phrase and term clauses, through the positive
+    clauses of bool and the inner query of filtered (the
     expansion-based types would need their expanded term lists — ES's
     plain highlighter has the same rewrite dependence; unsupported
     here, raises)."""
-    ((kind, body),) = clause.items()
-    if kind == "match":
-        _, spec = _field_body(body, "match")
-        return _analyze(spec if isinstance(spec, str) else spec["query"])
-    if kind == "match_phrase":
-        _, spec = _field_body(body, "match_phrase")
-        return _analyze(spec if isinstance(spec, str) else spec["query"])
+    kind, _, body = _parse(clause)
+    if kind in ("match", "match_phrase"):
+        return _analyze(body["query"])
+    if kind == "term":
+        return [str(body["value"])]
     if kind == "bool":
-        terms = []
-        for sub in body.get("should", []):
-            ((_, sbody),) = sub.items()
-            ((_, val),) = sbody.items()
-            terms.append(str(val))
-        return terms
+        return [
+            t
+            for occur in ("must", "should")
+            for sub in _as_clause_list(body.get(occur), occur)
+            for t in _highlight_terms(sub)
+        ]
     if kind == "filtered":
         return _highlight_terms(body.get("query", {"match_all": {}}))
     raise ValueError(f"highlight is not supported for query type {kind!r}")
@@ -914,64 +787,52 @@ def suggest_block(
     if not isinstance(body, dict) or not body:
         raise ValueError("suggest block must be a non-empty object")
     spark = index.dictionary.sparkSession
-    out = None
+    parts = []
     for name, spec in body.items():
-        unknown = set(spec) - {"text", "term", "phrase"}
-        if unknown:
-            raise ValueError(f"suggester {name!r}: unsupported key(s) {sorted(unknown)}")
-        if "text" not in spec or ("term" in spec) == ("phrase" in spec):
-            raise ValueError(
-                f"suggester {name!r} requires text and exactly one of term/phrase"
-            )
+        what = f"suggester {name!r}"
+        spec = _strict_keys(spec, what, ("term", "phrase"), ("text",))
+        if ("term" in spec) == ("phrase" in spec):
+            raise ValueError(f"{what} requires exactly one of term/phrase")
+        text = str(spec["text"])
         if "phrase" in spec:
             from ..operators.phrase_suggest import phrase_suggest
 
-            if tokens is None:
-                raise ValueError(
-                    f"suggester {name!r}: phrase suggester needs the tokens DataFrame"
-                )
-            popts = dict(spec["phrase"])
-            popts.pop("field", None)
-            allowed = {"size", "candidates_per_token", "max_edits",
-                       "prefix_length", "alpha"}
-            unknown = set(popts) - allowed
-            if unknown:
-                raise ValueError(
-                    f"suggester {name!r}: unsupported option(s) {sorted(unknown)}"
-                )
-            part = phrase_suggest(index, tokens, str(spec["text"]), **popts).select(
+            _need(tokens, "tokens", f"{what}: phrase suggester")
+            popts = _strict_keys(
+                spec["phrase"],
+                what,
+                ("field", "size", "candidates_per_token", "max_edits", "prefix_length", "alpha"),
+            )
+            popts.pop("field", None)  # single indexed field; any value names it
+            parts.append(phrase_suggest(index, tokens, text, **popts).select(
                 F.lit(name).alias("name"),
-                F.lit(str(spec["text"])).alias("input"),
+                F.lit(text).alias("input"),
                 "suggestion",
                 "score",
                 F.lit(None).cast("long").alias("freq"),
                 "rank",
-            )
-            out = part if out is None else out.unionByName(part)
+            ))
             continue
-        opts = dict(spec["term"])
-        opts.pop("field", None)  # single indexed field; any value names it
-        allowed = {
-            "size", "suggest_mode", "sort", "max_edits",
-            "prefix_length", "min_word_length", "min_doc_freq",
-        }
-        unknown = set(opts) - allowed
-        if unknown:
-            raise ValueError(f"suggester {name!r}: unsupported option(s) {sorted(unknown)}")
-        toks = _analyze(str(spec["text"]))
+        opts = _strict_keys(
+            spec["term"],
+            what,
+            ("field", "size", "suggest_mode", "sort", "max_edits", "prefix_length",
+             "min_word_length", "min_doc_freq"),
+        )
+        opts.pop("field", None)
+        toks = _analyze(text)
         if not toks:
-            raise ValueError(f"suggester {name!r}: text analyzed to zero tokens")
+            raise ValueError(f"{what}: text analyzed to zero tokens")
         inputs = list(enumerate(toks))
         sugg = term_suggest(index, inputs, **opts)
         labels = small_df(spark, 
             [(qid, name, tok) for qid, tok in inputs],
             "query_id long, name string, input string",
         )
-        part = sugg.join(F.broadcast(labels), "query_id").select(
+        parts.append(sugg.join(F.broadcast(labels), "query_id").select(
             "name", "input", "suggestion", "score", "freq", "rank"
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+        ))
+    return _union(parts)
 
 
 def count_hits(
@@ -985,11 +846,6 @@ def count_hits(
     parser as ``_search`` (every gated query type counts), with the
     ranking window elided: the scorer output aggregates to a single
     count, so no top-k window runs at all."""
-    body = request.get("query")
-    if body is None:
-        raise ValueError("_count request requires a query clause")
-    unknown = set(request) - {"query"}
-    if unknown:
-        raise ValueError(f"_count: unsupported key(s) {sorted(unknown)}")
-    hits = _scored_hits(index, body, index.n_docs, tokens, docs, False)
+    request = _strict_keys(request, "_count", (), ("query",))
+    hits = _scored_hits(_Ctx(index, tokens, docs, False), request["query"])
     return hits.agg(F.count("*").cast("long").alias("count"))

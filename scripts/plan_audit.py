@@ -328,11 +328,35 @@ def main() -> None:
         must=["ReadSchema: struct<doc_id:bigint,text:string>"],
         must_not=["Exchange", "BatchEvalPython", "ArrowEvalPython"],
     )
+    chunks = token_chunk(docs, max_tokens=16, stride=8)
     audit(
         "token_chunk_generate",
-        token_chunk(docs, max_tokens=16, stride=8),
+        chunks,
         must=["Arguments: posexplode", "ReadSchema: struct<doc_id:bigint,text:string>"],
-        must_not=["Exchange", "BatchEvalPython", "ArrowEvalPython"],
+        must_not=["BatchEvalPython", "ArrowEvalPython"],
+    )
+    # token_chunk's input-skew guard may spread a 1-file input with ONE
+    # explicit round-robin exchange (REPARTITION_BY_NUM), so the
+    # tokenize+slice CPU does not ride a single task; on an input that
+    # already splits it adds no exchange (the rule
+    # tests/test_plans.py::test_batch2_hygiene_ops_zero_shuffle checks)
+    chunk_plan = formatted(chunks)
+    n_spread = chunk_plan.count(") Exchange")
+    spread_ok = n_spread == 0 or (n_spread == 1 and "REPARTITION_BY_NUM" in chunk_plan)
+    if not spread_ok:
+        failures.append(
+            f"token_chunk_generate: {n_spread} exchange(s) on a 1-file input "
+            "(expected at most one REPARTITION_BY_NUM spread)"
+        )
+    wide = docs.repartition(8)
+    n_added = formatted(token_chunk(wide, max_tokens=16, stride=8)).count(
+        ") Exchange"
+    ) - formatted(wide).count(") Exchange")
+    if n_added:
+        failures.append(f"token_chunk_generate: adds {n_added} exchange(s) on a split input")
+    sections[-1][2].append(
+        f"{'OK ' if spread_ok and not n_added else 'VIOLATION '} {n_spread} spread "
+        f"exchange(s) on the 1-file input, {n_added} added on a split input"
     )
 
     # 13. phrase queries on the persisted index: the candidate pass must

@@ -349,6 +349,39 @@ def test_core_facet_parse_strictness(spark):
         parse_request({"facets": {"f": {"terms": {"field": "x"}, "mode": "post"}}})
 
 
+def test_core_facet_alias_tables():
+    """Every spelling of a facet key lowers to the same parameter; a
+    missing required key, an unknown key or a non-object body raises."""
+    from elasticsearch_approx_plugin_spark.plans.request_parser import (
+        parse_core_facet,
+        parse_request,
+    )
+
+    snake = parse_core_facet(
+        "terms_stats", {"key_field": "k", "value_field": "v", "all_terms": True}
+    )
+    camel = parse_core_facet(
+        "terms_stats", {"keyField": "k", "valueField": "v", "allTerms": True}
+    )
+    assert snake.params == camel.params == {"key_field": "k", "value_field": "v", "size": 0}
+    rng = parse_core_facet("range", {"keyField": "x", "ranges": [{"from": 1, "to": 2}]})
+    assert rng.params == {"field": "x", "ranges": [(1.0, 2.0)]}
+    hist = parse_core_facet("histogram", {"field": "x", "interval": "5"})
+    assert hist.params == {"key_field": "x", "interval": 5.0}
+    q = parse_request({"facets": {"t": {"term_list": {"keyField": "u", "maxPerShard": "7"}}}})
+    assert (q["t"].key_field, q["t"].max_per_shard) == ("u", 7)
+    for kind, body in (
+        ("terms", {"size": 3}),
+        ("range", {"field": "x"}),
+        ("range", {"field": "x", "ranges": [{"from": 1, "gt": 0}]}),
+        ("histogram", "x"),
+    ):
+        with pytest.raises(ValueError):
+            parse_core_facet(kind, body)
+    with pytest.raises(ValueError):
+        parse_request({"facets": {"t": {"term_list": {"maxPerShard": 7}}}})
+
+
 def test_filter_and_query_facets(spark, sf_dir):
     from elasticsearch_approx_plugin_spark.plans.request_parser import parse_request
 

@@ -199,6 +199,12 @@ def test_strictness(index, docs, tokens):
         {"term": {"text": {"boost": 2.0}}},
         {"match_phrase": {"text": {"query": "hash join", "slop": 2}}},
         {"match_phrase": {"text": {"slop": 0}}},
+        {"more_like_this": {"min_term_freq": 1}},
+        {"query_string": {"default_operator": "and"}},
+        {"span_first": {"match": {"span_term": {"text": {}}}, "end": 1}},
+        {"span_near": {"clauses": [{"span_term": {"text": {"value": "hash", "boost": 2.0}}}]}},
+        {"span_near": {"clauses": [{"span_term": {"text": {"value": "hash", "bogus": 1}}}]}},
+        {"terms": {"text": ["hash"], "minimum_match": 1, "minimum_should_match": 2}},
     ):
         with pytest.raises(ValueError):
             search_topk(index, {"query": query}, tokens=tokens)
@@ -406,6 +412,41 @@ def test_bool_general_matches_fast_path(index):
         )
     )
     assert fast == general
+
+
+def test_bool_boosted_term_keeps_its_boost(index):
+    # a boosted term leaves the should-only fast path and scores as the
+    # same boosted term query alone
+    boosted = {"term": {"text": {"value": "hash", "boost": 3.0}}}
+    alone = _rows(search_topk(index, {"query": boosted}))
+    in_bool = _rows(search_topk(index, {"query": {"bool": {"should": [boosted]}}}))
+    assert in_bool == alone and alone
+    for term in (
+        {"term": {"text": {"value": "hash", "boost": -1.0}}},
+        {"term": {"text": {"value": "hash", "bogus": 1}}},
+    ):
+        with pytest.raises(ValueError):
+            search_topk(index, {"query": {"bool": {"should": [term]}}})
+
+
+def _snippets(index, docs, query):
+    req = {"query": query, "highlight": {"fragment_size": 60}}
+    return {r["doc_id"]: r["snippet"] for r in search_topk(index, req, docs=docs).collect()}
+
+
+def test_highlight_bool_clauses(index, docs):
+    # a single should clause needs no list
+    one = _snippets(index, docs, {"bool": {"should": {"term": {"text": "join"}}}})
+    assert one[3] == "<em>join</em> table <em>join</em>"
+    # a term in object form highlights its value
+    obj = _snippets(index, docs, {"bool": {"should": [
+        {"term": {"text": {"value": "join"}}}, {"term": {"text": "slow"}},
+    ]}})
+    assert "<em>join</em>" in obj[0] and obj[2].startswith("<em>slow</em>")
+    # a match clause highlights its analyzed terms
+    match = _snippets(index, docs, {"bool": {"should": [{"match": {"text": "hash scan"}}]}})
+    assert match[4] == "<em>hash</em> hash <em>hash</em>"
+    assert match[0] == "<em>scan</em> beats <em>hash</em> join"
 
 
 def test_sort_reranks_full_match_set(index, docs):
